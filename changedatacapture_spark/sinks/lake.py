@@ -43,15 +43,16 @@ the interface is exactly what an Iceberg backend would implement:
   lazy compaction the old inline file map was a per-epoch driver-side
   O(files) JSON serialization (VERDICT r2 'what's wrong #3').
 - **File-level key skipping**: every data file's manifest entry carries a
-  Bloom filter over its merge keys (built at commit time from the written
-  file's key column — the Iceberg puffin/bloom stats twin). Reads that know
+  Bloom filter over its merge keys and the file's order-key bounds, built by
+  the same task that writes the file (one Spark job per commit, no
+  read-back — the Iceberg puffin/bloom stats twin). Reads that know
   their probe keys (`read_keys`, `read_bucket_winners(probe_keys=...)`)
   skip files whose bloom excludes every probe key: a 1-url point read
   touches its bucket's *matching* delta files only, not all of them, and the
   driver's pre-MERGE probe / embedding-reuse pre-read prune the same way
   (VERDICT r2 'scale-killer to name this round'). No false negatives: a
-  file containing a probe key is always kept; files too large to bloom
-  (``bloom_max_keys``) are conservatively always read.
+  file containing a probe key is always kept; files with more than
+  ``_BLOOM_MAX_KEYS`` keys carry no bloom and are conservatively always read.
 - **LWW tombstones**: deletes are kept as ``is_deleted=1`` rows carrying
   their (warc_ts, pos), so replayed older events cannot resurrect a deleted
   key; readers filter them after resolution (SURVEY.md §7 'cross-batch LWW
@@ -91,7 +92,6 @@ import json
 import os
 import shutil
 import uuid
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,13 +118,16 @@ def _bucket_col(key: str, n_buckets: int) -> F.Column:
 
 # ---------------------------------------------------------------------------
 # Per-file key Bloom filters (manifest stats). Pure-python + md5 so the
-# driver can both build (from the written file's key column) and test
-# (membership of probe keys) without a Spark job; ~10 bits/key ≈ 1% FP —
-# a false positive only costs one extra file read, never a wrong result.
+# commit's write tasks build them and the driver tests probe keys against
+# them without a Spark job; ~10 bits/key ≈ 1% FP — a false positive only
+# costs one extra file read, never a wrong result.
 # ---------------------------------------------------------------------------
 
 _BLOOM_BITS_PER_KEY = 10
 _BLOOM_K = 7
+# files with more keys (post-compaction base files of huge buckets) get no
+# bloom and are conservatively always read
+_BLOOM_MAX_KEYS = 200_000
 
 
 def _bloom_hashes(key: str) -> tuple[int, int]:
@@ -132,47 +135,21 @@ def _bloom_hashes(key: str) -> tuple[int, int]:
     return int.from_bytes(d[:8], "little"), int.from_bytes(d[8:], "little") | 1
 
 
-def _bloom_hash_pairs(keys) -> list[tuple[int, int]]:
-    return [_bloom_hashes(k) for k in keys]
-
-
 def _bloom_from_pairs(pairs) -> list | None:
     n = len(pairs)
     if n == 0:
         return None
-    m = _bloom_m_for(n)
+    m = ((n * _BLOOM_BITS_PER_KEY + 63) // 64) * 64
     bits = bytearray(m // 8)
     for h1, h2 in pairs:
-        _bloom_insert(bits, m, h1, h2)
+        for i in range(_BLOOM_K):
+            pos = (h1 + i * h2) % m
+            bits[pos >> 3] |= 1 << (pos & 7)
     return [m, _BLOOM_K, base64.b64encode(bytes(bits)).decode("ascii")]
 
 
 def _bloom_build(keys) -> list | None:
-    return _bloom_from_pairs(_bloom_hash_pairs(keys))
-
-
-def _bloom_m_for(n_keys: int) -> int:
-    """Bitmap size (bits) for ``n_keys`` keys — the one sizing rule every
-    build path shares, so a bloom built in one pass, from merged hash pairs,
-    or by OR-ing fixed-``m`` partial bitmaps is byte-identical."""
-    return ((n_keys * _BLOOM_BITS_PER_KEY + 63) // 64) * 64
-
-
-def _bloom_insert(bits: bytearray, m: int, h1: int, h2: int) -> None:
-    for i in range(_BLOOM_K):
-        pos = (h1 + i * h2) % m
-        bits[pos >> 3] |= 1 << (pos & 7)
-
-
-def _bloom_or(m: int, bitmaps_b64: list[str]) -> list:
-    """OR fixed-``m`` partial bitmaps into one bloom entry. Bloom insertion
-    commutes, so the OR of per-partition partials equals the single-pass
-    build bit for bit (pinned in tests/test_round4.py)."""
-    acc = bytearray(m // 8)
-    for b64 in bitmaps_b64:
-        for i, byte in enumerate(base64.b64decode(b64)):
-            acc[i] |= byte
-    return [m, _BLOOM_K, base64.b64encode(bytes(acc)).decode("ascii")]
+    return _bloom_from_pairs([_bloom_hashes(k) for k in keys])
 
 
 def _bloom_may_contain(bloom: list, probe_hashes: list[tuple[int, int]]) -> bool:
@@ -369,14 +346,11 @@ class StaleEpochError(RuntimeError):
 class LakeTable:
     """A key-bucketed upsert table with snapshot isolation (merge-on-read).
 
-    Deployment note (ADVICE r4): with the default ``file_stats=True`` every
-    merge runs a small distributed stats job (``_file_stats_job``) whose
-    python workers import THIS package — executors must carry
-    ``changedatacapture_spark`` on their ``PYTHONPATH``/``--py-files``
-    (pipelines that ship UDFs already do; a bare library user who cannot
-    ship the package should construct the table with ``file_stats=False``
-    and lose file-level key skipping, never correctness). The same applies
-    to :func:`build_key_probe`."""
+    Deployment note: every commit writes its data files from python tasks
+    on the executors (``_write_buckets``), and :func:`build_key_probe`
+    runs python tasks too — executors must carry
+    ``changedatacapture_spark`` on their ``PYTHONPATH``/``--py-files``,
+    exactly as every pipeline UDF already requires."""
 
     def __init__(
         self,
@@ -385,8 +359,6 @@ class LakeTable:
         n_buckets: int = 16,
         mode: str = "row",
         *,
-        file_stats: bool = True,
-        bloom_max_keys: int = 200_000,
         bucket_source: str = "key_hash",
         retention_snapshots: int = 0,
     ):
@@ -399,12 +371,6 @@ class LakeTable:
         self.key = key
         self.n_buckets = n_buckets
         self.mode = mode
-        # file_stats: build a per-file key bloom at commit time (one columnar
-        # key-column read of each freshly written file). bloom_max_keys caps
-        # the bloom size: files with more keys (post-compaction base files of
-        # huge buckets) get no bloom and are conservatively always read.
-        self.file_stats = file_stats
-        self.bloom_max_keys = bloom_max_keys
         # vacuum keeps the files of the newest `retention_snapshots`
         # non-expired snapshots alive in addition to the current one — the
         # time-travel / change-feed retention window (Iceberg's
@@ -428,9 +394,6 @@ class LakeTable:
         os.makedirs(self.manifest_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
         self._manifest_cache: dict[str, list[dict]] = {}
-        # wall-clock of the last commit's write vs stats jobs (telemetry for
-        # the bench's phase attribution; no behavior rides on it)
-        self.last_commit_timings: dict[str, float] = {}
         self._expired_cache: tuple[int, set[int]] | None = None
         self._adopt_expired_list()
         # the key→bucket mapping is part of the table's physical layout: an
@@ -813,7 +776,7 @@ class LakeTable:
         self, entries: list[dict], probe_hashes: list[tuple[int, int]] | None
     ) -> list[dict]:
         """Bloom file skipping: drop files whose key bloom excludes every
-        probe key. Files without a bloom (legacy / over-``bloom_max_keys``)
+        probe key. Files without a bloom (legacy / over-``_BLOOM_MAX_KEYS``)
         are always kept — pruning is conservative, never lossy."""
         if probe_hashes is None:
             return entries
@@ -1170,10 +1133,8 @@ class LakeTable:
             # determine the full member payload (identity-bearing columns —
             # e.g. ``chunk_id``+``embedding``, both content-derived), else
             # unchanged-member suppression weakens to subset equality.
-            # The full-payload default is the oracle-gated shape.
-            if columns is not None:
-                missing = set(columns) - set(c for c, _ in self.schema_columns())
-                assert not missing, f"unknown feed columns: {sorted(missing)}"
+            # The full-payload default is the oracle-gated shape. Checked
+            # against the window's schema once ``until`` is resolved below.
         else:
             assert self.mode == "row", "read_changes serves row/set-mode tables"
             assert member_key is None, "member_key applies to set-mode tables only"
@@ -1190,6 +1151,12 @@ class LakeTable:
         snap_until = cur if until == int(cur["snapshot_id"]) else self.snapshot(until)
         if snap_until is None:
             raise ChangeFeedUnavailableError(f"snapshot {until} is expired")
+        if columns is not None:
+            # the feed reads the window's schema, not the current one: a
+            # column evolved after ``until`` is unknown to this window
+            missing = set(columns) - {c for c, _ in snap_until["schema"]}
+            if missing:
+                raise ValueError(f"unknown feed columns: {sorted(missing)}")
         snap_since = None
         if since > 0:
             snap_since = self.snapshot(since)
@@ -1953,217 +1920,22 @@ class LakeTable:
                 names.add(n)
         return cols
 
-    def _file_stats_job(self, spark: SparkSession, commit_dir: str) -> dict[str, dict]:
-        """Per-file (row count, key bloom) for a freshly written commit,
-        computed INSIDE Spark: one column-pruned scan of the commit's key
-        column grouped by physical file, bloom bitmaps built in the executor
-        tasks, and only O(files) small (rows, bitmap) tuples returned to the
-        driver. Replaces the round-3 driver-side pyarrow re-read of every
-        written file — the one per-epoch driver cost that grew with batch
-        size (at 100× batches the driver never touches data bytes now)."""
-        key, cap = self.key, self.bloom_max_keys
-        sch = dict(self._current_write_schema)
-        key_type = sch.get(key, "string")
-        # per-file min/max of the LWW order key (k0,k1,k2) — computed from
-        # the same expressions as operators.lww.order_key_cols so the triple
-        # is comparable with truncate horizons and read_since() probes. The
-        # lake's warc_ts is a Spark TIMESTAMP (an instant): unix_micros over
-        # it is session-TZ-independent, so bounds written by one session
-        # prune correctly in another (the NTZ hazard lives at ingest only).
-        has_order = {"op", "warc_ts", "pos"}.issubset(sch)
-
-        def per_file_stats(batches):
-            """SHUFFLE-FREE per-file aggregation: a scan partition holds
-            whole files back-to-back (small files are packed), so streaming
-            the Arrow batches in order and cutting on file change yields one
-            (file, rows, nkeys, bloom) partial per file per partition with
-            no exchange. The partial carries ONLY the counts and the bloom
-            bitmap — never per-key payload (the round-4 packed hash pairs
-            were up to 16 B/key per file through collect, ADVICE r4); a
-            file that spans partitions shows up as several partials and the
-            driver rebuilds its bloom with one targeted second job."""
-            import json as _json
-
-            import pandas as _pd
-
-            cur = None
-            n = 0
-            nk = 0
-            pairs: list | None = []
-            omin = omax = None  # lexicographic (k0,k1,k2) bounds
-            onull = False  # any null order component → no bounds (conservative)
-
-            def flush():
-                bloom = None
-                if pairs is not None and 0 < nk:
-                    bloom = _bloom_from_pairs(pairs)
-                return _pd.DataFrame(
-                    {
-                        "f": [cur],
-                        "rows": [n],
-                        "nkeys": [nk],
-                        "bloom": [_json.dumps(bloom) if bloom is not None else None],
-                        "obounds": [
-                            None
-                            if onull or omin is None
-                            else _json.dumps([list(omin), list(omax)])
-                        ],
-                    }
-                )
-
-            for pdf in batches:
-                for f, grp in pdf.groupby("_f", sort=False):
-                    if f != cur:
-                        if cur is not None:
-                            yield flush()
-                        cur, n, nk, pairs = f, 0, 0, []
-                        omin = omax = None
-                        onull = False
-                    n += len(grp)
-                    keys = [k for k in grp["_k"].tolist() if k is not None]
-                    nk += len(keys)
-                    if pairs is not None:
-                        if nk > cap:
-                            pairs = None  # over bloom cap: count only
-                        else:
-                            pairs.extend(_bloom_hashes(k) for k in keys)
-                    if "_k0" in grp.columns and not onull:
-                        for t in zip(
-                            grp["_k0"].tolist(),
-                            grp["_k1"].tolist(),
-                            grp["_k2"].tolist(),
-                        ):
-                            if any(v is None or v != v for v in t):  # None/NaN
-                                onull = True
-                                break
-                            t = (int(t[0]), int(t[1]), int(t[2]))
-                            if omin is None or t < omin:
-                                omin = t
-                            if omax is None or t > omax:
-                                omax = t
-            if cur is not None:
-                yield flush()
-
-        read_schema = f"`{key}` {key_type}"
-        cols = [
-            F.input_file_name().alias("_f"),
-            F.col(key).cast("string").alias("_k"),
-        ]
-        if has_order:
-            read_schema += (
-                f", `op` {sch['op']}, `warc_ts` {sch['warc_ts']}, `pos` {sch['pos']}"
-            )
-            ok = _order_key()
-            cols += [
-                ok["k0"].cast("bigint").alias("_k0"),
-                ok["k1"].cast("bigint").alias("_k1"),
-                ok["k2"].cast("bigint").alias("_k2"),
-            ]
-        src = spark.read.schema(read_schema).parquet(commit_dir).select(*cols)
-        collected = src.mapInPandas(
-            per_file_stats,
-            "f string, rows bigint, nkeys bigint, bloom string, obounds string",
-        ).collect()
-        partials: dict[str, list] = {}
-        for r in collected:
-            p = os.path.normpath(unquote(urlparse(r["f"]).path))
-            partials.setdefault(p, []).append(r)
-        out: dict[str, dict] = {}
-        split_targets: dict[str, int] = {}  # abs path → total non-null keys
-        for p, parts in partials.items():
-            rows = sum(int(r["rows"]) for r in parts)
-            nkeys = sum(int(r["nkeys"]) for r in parts)
-            bloom = None
-            if len(parts) == 1:
-                bloom = json.loads(parts[0]["bloom"]) if parts[0]["bloom"] else None
-            elif 0 < nkeys <= cap:
-                # split file (spanned scan partitions): rebuild its bloom
-                # from the data with a second job scoped to just these
-                # files — rare (file > maxPartitionBytes), so the common
-                # path ships no per-key bytes at all
-                split_targets[p] = nkeys
-            # order-key bounds merge trivially across split partials (min of
-            # mins / max of maxes) — any null partial poisons the file's
-            # bounds (conservative: the file is never order-pruned)
-            ob = None
-            if has_order and all(r["obounds"] for r in parts):
-                bs = [json.loads(r["obounds"]) for r in parts]
-                ob = [
-                    min(tuple(b[0]) for b in bs),
-                    max(tuple(b[1]) for b in bs),
-                ]
-                ob = [list(ob[0]), list(ob[1])]
-            out[p] = {"rows": rows, "bloom": bloom, "obounds": ob}
-        if split_targets:
-            for p, bloom in self._split_file_blooms(spark, split_targets).items():
-                out[p]["bloom"] = bloom
-        return out
-
-    def _split_file_blooms(
-        self, spark: SparkSession, targets: dict[str, int]
-    ) -> dict[str, list]:
-        """Rebuild full blooms for files that spanned scan partitions: each
-        partition emits a FIXED-``m`` partial bitmap for its slice of the
-        file (``m`` derives from the file's total key count, known from the
-        stats pass) and the driver ORs the bitmaps — bloom insertion
-        commutes, so the result is byte-identical to a single-pass build
-        (pinned in tests/test_round4.py). Payload per partial is O(bitmap),
-        never O(keys)."""
-        key = self.key
-        key_type = dict(self._current_write_schema).get(key, "string")
-        m_by_path = {p: _bloom_m_for(nk) for p, nk in targets.items()}
-
-        def partial_bitmaps(batches):
-            import pandas as _pd
-            from urllib.parse import unquote as _unq, urlparse as _up
-
-            cur = None
-            m = 0
-            bits = None
-
-            def flush():
-                return _pd.DataFrame(
-                    {
-                        "f": [cur],
-                        "bm": [base64.b64encode(bytes(bits)).decode("ascii")],
-                    }
-                )
-
-            for pdf in batches:
-                for f, grp in pdf.groupby("_f", sort=False):
-                    p = os.path.normpath(_unq(_up(f).path))
-                    if p != cur:
-                        if cur is not None:
-                            yield flush()
-                        cur = p
-                        m = m_by_path[p]
-                        bits = bytearray(m // 8)
-                    for k in grp["_k"].tolist():
-                        if k is not None:
-                            h1, h2 = _bloom_hashes(k)
-                            _bloom_insert(bits, m, h1, h2)
-            if cur is not None:
-                yield flush()
-
-        src = spark.read.schema(f"`{key}` {key_type}").parquet(
-            *sorted(targets)
-        ).select(
-            F.input_file_name().alias("_f"),
-            F.col(key).cast("string").alias("_k"),
-        )
-        rows = src.mapInPandas(partial_bitmaps, "f string, bm string").collect()
-        by_path: dict[str, list[str]] = {}
-        for r in rows:
-            by_path.setdefault(r["f"], []).append(r["bm"])
-        return {p: _bloom_or(m_by_path[p], bms) for p, bms in by_path.items()}
-
     def _write_buckets(
         self, df: DataFrame, snapshot_id: int, tag: str = ""
     ) -> dict[str, list[dict]]:
-        """Write df (already carrying _bucket) partitioned by bucket into an
-        immutable commit dir; return bucket → manifest entries (path, rows,
-        key bloom). File stats come from ``_file_stats_job`` — a distributed
-        aggregate over the just-written files, never a driver-side read.
+        """Write df (already carrying _bucket) into an immutable commit dir
+        and return bucket → manifest entries (path, rows, key bloom,
+        order-key bounds), all in ONE Spark job: a hash shuffle on
+        ``_bucket`` puts every bucket in exactly one task, and each task
+        streams its rows into one parquet file per bucket it holds while
+        computing that file's stats. The manifest lists only the files the
+        job returns — anything else in a commit dir (a failed task
+        attempt's file) is never read, and ``vacuum`` reclaims it.
+
+        The shuffle has no fixed partition count: with AQE on, whole hash
+        partitions are coalesced, so a small commit runs one python task
+        rather than one per bucket; with AQE off, each bucket still lands
+        in exactly one of the ``shuffle.partitions`` tasks.
 
         ``tag`` (concurrent-writer safety): a per-attempt suffix keeps two
         racing writers that both target snapshot id N from writing into the
@@ -2176,47 +1948,92 @@ class LakeTable:
         commit_dir = os.path.join(
             self.data_dir, f"commit-{snapshot_id:012d}" + (f"-{tag}" if tag else "")
         )
-        # co-locate each bucket in one task → one file per touched bucket
-        # (without this, every reduce task writes a sliver of every bucket:
-        # tasks × buckets small files)
-        import time as _time
-
-        t0 = _time.monotonic()
-        df.repartition(self.n_buckets, "_bucket").write.mode("overwrite").partitionBy(
-            "_bucket"
-        ).parquet(commit_dir)
-        self.last_commit_timings["write"] = round(_time.monotonic() - t0, 3)
-        paths: dict[str, list[str]] = {}
-        for entry in sorted(os.listdir(commit_dir)):
-            if not entry.startswith("_bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            bdir = os.path.join(commit_dir, entry)
-            paths[b] = [
-                os.path.join(bdir, f)
-                for f in sorted(os.listdir(bdir))
-                if f.endswith(".parquet")
+        data_cols = [c for c in df.columns if c != "_bucket"]
+        stat_cols = [F.col(self.key).cast("string").alias("__k")]
+        # per-file min/max of the LWW order key (k0,k1,k2), from the same
+        # expressions as operators.lww.order_key_cols so the bounds compare
+        # with truncate horizons and read_since() probes. The lake's
+        # warc_ts is a Spark TIMESTAMP (an instant): unix_micros over it is
+        # session-TZ-independent, so bounds written by one session prune
+        # correctly in another (the NTZ hazard lives at ingest only).
+        if {"op", "warc_ts", "pos"}.issubset(data_cols):
+            ok = _order_key()
+            stat_cols += [
+                ok[k].cast("bigint").alias(f"__{k}") for k in ("k0", "k1", "k2")
             ]
-        stats: dict[str, dict] = {}
-        if self.file_stats and any(paths.values()):
-            t0 = _time.monotonic()
-            stats = self._file_stats_job(df.sparkSession, commit_dir)
-            self.last_commit_timings["stats"] = round(_time.monotonic() - t0, 3)
+        src = df.repartition("_bucket").select(*data_cols, "_bucket", *stat_cols)
+
+        def write_files(batches):
+            import numpy as np
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            files: dict[int, dict] = {}  # bucket → open writer + stats
+            try:
+                for rb in batches:
+                    t = pa.Table.from_batches([rb])
+                    bcol = t.column("_bucket").to_numpy()
+                    for b in np.unique(bcol).tolist():
+                        part = t.filter(pa.array(bcol == b))
+                        data = part.select(data_cols)
+                        f = files.get(b)
+                        if f is None:
+                            bdir = os.path.join(commit_dir, f"_bucket={b}")
+                            os.makedirs(bdir, exist_ok=True)
+                            path = os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet")
+                            f = files[b] = {
+                                "w": pq.ParquetWriter(path, data.schema),
+                                "p": path,
+                                "rows": 0,
+                                "pairs": [],  # None once over the bloom cap
+                                "o": [],  # None once any order component is null
+                            }
+                        f["w"].write_table(data)
+                        f["rows"] += part.num_rows
+                        if f["pairs"] is not None:
+                            keys = part.column("__k").to_pylist()
+                            f["pairs"].extend(_bloom_hashes(k) for k in keys if k is not None)
+                            if len(f["pairs"]) > _BLOOM_MAX_KEYS:
+                                f["pairs"] = None
+                        if "__k0" in t.column_names and f["o"] is not None:
+                            ks = [part.column(f"__{k}").to_pylist() for k in ("k0", "k1", "k2")]
+                            triples = list(zip(*ks))
+                            if any(None in tr for tr in triples):
+                                f["o"] = None  # unorderable row: never order-pruned
+                            else:
+                                f["o"] = [min(f["o"] + triples), max(f["o"] + triples)]
+            finally:
+                for f in files.values():
+                    f["w"].close()
+            out = {"_bucket": [], "p": [], "rows": [], "bloom": [], "o": []}
+            for b, f in files.items():
+                bloom = None if f["pairs"] is None else _bloom_from_pairs(f["pairs"])
+                out["_bucket"].append(b)
+                out["p"].append(f["p"])
+                out["rows"].append(f["rows"])
+                out["bloom"].append(json.dumps(bloom) if bloom is not None else None)
+                out["o"].append(json.dumps([list(x) for x in f["o"]]) if f["o"] else None)
+            yield pa.RecordBatch.from_pydict(
+                out,
+                schema=pa.schema(
+                    [("_bucket", pa.int32()), ("p", pa.string()), ("rows", pa.int64()),
+                     ("bloom", pa.string()), ("o", pa.string())]
+                ),
+            )
+
+        written = src.mapInArrow(
+            write_files, "_bucket int, p string, rows bigint, bloom string, o string"
+        ).collect()
         out: dict[str, list[dict]] = {}
-        for b, ps in paths.items():
-            out[b] = []
-            for p in ps:
-                st = stats.get(os.path.normpath(p))
-                rel = os.path.relpath(p, self.path)
-                if st is None:
-                    # no stats (file_stats off, or a zero-row straggler the
-                    # scan never surfaced) → conservatively always read
-                    out[b].append({"p": rel, "rows": None, "bloom": None})
-                else:
-                    e = {"p": rel, "rows": st["rows"], "bloom": st["bloom"]}
-                    if st.get("obounds") is not None:
-                        e["o"] = st["obounds"]  # [[k0,k1,k2]min, [..]max]
-                    out[b].append(e)
+        for r in sorted(written, key=lambda r: str(r["_bucket"])):
+            e = {
+                "p": os.path.relpath(r["p"], self.path),
+                "rows": r["rows"],
+                "bloom": json.loads(r["bloom"]) if r["bloom"] else None,
+            }
+            if r["o"]:
+                e["o"] = json.loads(r["o"])  # [[k0,k1,k2]min, [..]max]
+            out.setdefault(str(r["_bucket"]), []).append(e)
         return out
 
     def _commit(
@@ -2847,11 +2664,10 @@ class LakeTable:
 
     def vacuum(self) -> int:
         """Delete data files unreferenced by the current snapshot (crash
-        leftovers / superseded buckets) and commit dirs left holding no
-        parquet at all (e.g. the _SUCCESS-only dirs of empty no-op-epoch
-        appends — they would otherwise accumulate one per skipped epoch
-        forever). Historical snapshots whose files are reclaimed here read
-        as expired (``snapshot`` returns None). Returns files removed."""
+        leftovers, failed task attempts' files, superseded buckets) and
+        commit dirs left holding no live parquet. Historical snapshots whose
+        files are reclaimed here read as expired (``snapshot`` returns
+        None). Returns files removed."""
         snap = self.current_snapshot()
         live: set[str] = set()
         if snap:

@@ -263,7 +263,6 @@ class CdcPipeline:
                 evolved_types=etypes,
             )
             mark("merge", tick)
-            phases["merge_jobs"] = dict(self.pages.last_commit_timings)
             pages_replayed = snap is None  # pages already committed this epoch
             if pages_replayed and not self.with_chunks:
                 return
@@ -291,7 +290,6 @@ class CdcPipeline:
                     truncate=truncate,
                 )
                 mark("chunks", tick)
-                phases["chunks_jobs"] = dict(self.chunks.last_commit_timings)
 
             if epoch_id is None:
                 # unlogged replay: no lineage/maintenance bookkeeping — the

@@ -2,8 +2,13 @@
 the chunks commit must not lose the chunks epoch on replay, and replays must
 not double-apply either table. Plus the JSONL (wire-faithful) feed path."""
 
+import os
+
+import pytest
+
 from changedatacapture_spark import gen, oracle
 from changedatacapture_spark.operators import envelope
+from changedatacapture_spark.sinks.lake import LakeTable
 from changedatacapture_spark.streaming.driver import CdcPipeline
 
 
@@ -42,6 +47,76 @@ def test_crash_between_pages_and_chunks_commits(spark, tmp_path, testdata_dir):
     pipe.apply_batch(batch, epoch_id=0)
     assert pipe.pages.current_snapshot()["snapshot_id"] == ps
     assert pipe.chunks.current_snapshot()["snapshot_id"] == cs
+
+
+def _live_files(table):
+    return {p for ps in table.bucket_files().values() for p in ps}
+
+
+def _parquet_on_disk(table):
+    return {
+        os.path.join(root, f)
+        for root, _d, fs in os.walk(table.data_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+@pytest.mark.parametrize("crash_at", ["pages", "chunks"])
+def test_crash_after_data_files_before_publish(
+    spark, tmp_path, testdata_dir, monkeypatch, crash_at
+):
+    """A crash after a commit's data files are written but before its
+    snapshot is published: the files stay unreferenced, a fresh pipeline
+    replaying the epoch reaches the oracle state with every manifest path
+    present, and vacuum reclaims the unpublished files."""
+    seg = str(tmp_path / "log")
+    events = gen.generate_small(seg, n_urls=20, n_events=120, seed=33, testdata_dir=testdata_dir)
+    batch = envelope.read_segments(spark, seg)
+    lake = str(tmp_path / "lake")
+
+    publish = LakeTable._publish
+    crashed_once = []
+
+    def crash_once(self, snap):
+        if not crashed_once and self.path.endswith(crash_at):
+            crashed_once.append(self.path)
+            raise RuntimeError("simulated crash before publish")
+        return publish(self, snap)
+
+    monkeypatch.setattr(LakeTable, "_publish", crash_once)
+    crashed = CdcPipeline(lake, n_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        crashed.apply_batch(batch, epoch_id=0)
+    monkeypatch.undo()
+    assert crashed_once
+    unpublished = set()
+    for t in (crashed.pages, crashed.chunks):
+        unpublished |= _parquet_on_disk(t) - _live_files(t)
+    assert unpublished, "the crashed commit wrote no data files"
+
+    pipe = CdcPipeline(lake, n_buckets=4)
+    pipe.apply_batch(batch, epoch_id=0)
+    state = oracle.fold_events(events)
+    pages = {r["url"]: r["text"] for r in pipe.pages.read(spark).collect()}
+    assert pages == {u: p["text"] for u, p in state.items()}
+    got_chunks: dict[str, list] = {}
+    for r in sorted(
+        pipe.chunks.read(spark).collect(), key=lambda r: (r["url"], r["chunk_index"])
+    ):
+        got_chunks.setdefault(r["url"], []).append(r["content"])
+    exp_chunks = {
+        u: [c["content"] for c in oracle.chunk_by_sections(p["text"])]
+        for u, p in state.items()
+    }
+    assert got_chunks == {u: cs for u, cs in exp_chunks.items() if cs}
+
+    for t in (pipe.pages, pipe.chunks):
+        assert all(os.path.exists(p) for p in _live_files(t))
+        t.vacuum()
+        assert _parquet_on_disk(t) == _live_files(t)
+    assert not any(os.path.exists(p) for p in unpublished)
+    assert {r["url"]: r["text"] for r in pipe.pages.read(spark).collect()} == pages
 
 
 def test_jsonl_feed_with_corrupt_rows(spark, tmp_path, testdata_dir):

@@ -2,7 +2,9 @@
 tombstone anti-resurrection, schema evolution, key-replace for chunks."""
 
 import datetime as dt
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from changedatacapture_spark import gen, oracle
@@ -458,3 +460,180 @@ def test_expire_snapshots_bounds_metadata(spark, tmp_path):
     )
     table.expire_snapshots(keep_last=2)
     assert table.read(spark).count() == 21
+
+
+# ---------------------------------------------------------------------------
+# One-job commits: the write tasks write the bucket files and return the
+# manifest entries; nothing is listed or read back
+# ---------------------------------------------------------------------------
+
+_WIDE_SCHEMA = (
+    "url string, warc_ts timestamp, pos long, op string, is_deleted int, "
+    "html binary, embedding array<float>"
+)
+
+
+def _live_files(table):
+    return {p for ps in table.bucket_files().values() for p in ps}
+
+
+def _parquet_on_disk(table):
+    return {
+        os.path.join(root, f)
+        for root, _d, fs in os.walk(table.data_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+def test_commit_round_trip_under_non_utc_session_zone(spark, tmp_path):
+    """Files written by the commit's python tasks read back through Spark
+    exactly as written — timestamp instants, binary html, array<float>
+    embeddings and a column evolved in a later commit — under a non-UTC
+    session zone; each entry's rows/bloom/order bounds describe its file."""
+    from changedatacapture_spark.operators.lww import _order_key
+    from changedatacapture_spark.sinks.lake import _bloom_build
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        ts = dt.datetime(2024, 3, 10, 1, 30)  # spans that zone's DST jump
+        e0 = [
+            (f"u{i}", ts + dt.timedelta(hours=i), i, "c", 0, bytes([i, 0, 255]),
+             [float(i), -0.5])
+            for i in range(12)
+        ]
+        e0[3] = e0[3][:5] + (None, None)
+        e1 = [
+            (f"v{i}", ts + dt.timedelta(days=1, seconds=i), 100 + i, "u", 0,
+             b"<p>x</p>", [1.25, float(i)], f"title {i}")
+            for i in range(6)
+        ]
+        df0 = spark.createDataFrame(e0, _WIDE_SCHEMA)
+        df1 = spark.createDataFrame(e1, _WIDE_SCHEMA + ", x_title string")
+        table = LakeTable(str(tmp_path / "rt"), key="url", n_buckets=4)
+        table.merge_lww(spark, df0, epoch_id=0)
+        table.merge_lww(spark, df1, epoch_id=1)
+
+        def rows(df):
+            df = df.withColumn("_us", F.unix_micros("warc_ts"))
+            return sorted(
+                (r.asDict() for r in df.collect()), key=lambda r: r["url"]
+            )
+
+        expected = rows(df0.withColumn("x_title", F.lit(None).cast("string")))
+        expected += rows(df1)
+        got = table.read(spark)
+        assert got.columns == [
+            "url", "warc_ts", "pos", "op", "is_deleted", "html", "embedding",
+            "x_title",
+        ]
+        assert rows(got) == expected
+
+        snap = table.current_snapshot()
+        for es in table._entries(snap).values():
+            for e in es:
+                f = table._read_files(spark, [table._abs(e["p"])])
+                ok = _order_key()
+                r = f.select(
+                    F.count("*").alias("n"),
+                    F.min(ok).alias("lo"),
+                    F.max(ok).alias("hi"),
+                    F.collect_list("url").alias("keys"),
+                ).first()
+                assert e["rows"] == r["n"]
+                assert e["bloom"] == _bloom_build(r["keys"])
+                assert e["o"] == [list(r["lo"]), list(r["hi"])]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+@pytest.mark.parametrize("aqe,partitions", [("true", "4"), ("false", "3")])
+def test_one_file_per_touched_bucket(spark, tmp_path, aqe, partitions):
+    """Hash-partitioning on _bucket without a fixed count keeps each bucket
+    in one task — one file per touched bucket with AQE coalescing on, and
+    with AQE off and fewer shuffle partitions than buckets."""
+    conf = {
+        "spark.sql.adaptive.enabled": aqe,
+        "spark.sql.shuffle.partitions": partitions,
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        table = LakeTable(str(tmp_path / "ob"), key="url", n_buckets=8)
+        ts = dt.datetime(2024, 1, 1)
+        df = spark.createDataFrame(
+            [(f"u{i}", ts, i, "c", 0, f"v{i}") for i in range(40)], _R3_SCHEMA
+        )
+        table.merge_lww(spark, df, epoch_id=0, pre_reduced=True)
+        touched = {
+            r["_b"] for r in df.select(table._bucket_expr().alias("_b")).collect()
+        }
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    files = table.bucket_files()
+    assert {int(b) for b in files} == touched and len(touched) > 1
+    assert all(len(ps) == 1 for ps in files.values()), files
+    assert _parquet_on_disk(table) == _live_files(table)
+    assert table.read(spark).count() == 40
+
+
+def test_small_merge_runs_at_most_two_jobs(spark, tmp_path):
+    """A commit is one write job: the shuffle-map stage plus the stage whose
+    tasks write the files and return their stats — no read-back job."""
+    import uuid
+
+    table = LakeTable(str(tmp_path / "jobs"), key="url", n_buckets=8)
+    ts = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(f"u{i}", ts, i, "c", 0, f"v{i}") for i in range(40)], _R3_SCHEMA
+    )
+    sc = spark.sparkContext
+    group = f"merge-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one merge_lww")
+    try:
+        table.merge_lww(spark, df, epoch_id=0, pre_reduced=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, f"merge_lww ran {len(jobs)} Spark jobs"
+    assert table.read(spark).count() == 40
+
+
+def test_orphan_file_in_committed_bucket_dir_is_never_read(spark, tmp_path):
+    """A parquet file left in a committed _bucket= dir (what a failed task
+    attempt leaves) is not in the manifest: reads never see it, even when
+    its rows would win LWW, and vacuum reclaims it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = LakeTable(str(tmp_path / "orph"), key="url", n_buckets=2)
+    ts = dt.datetime(2024, 1, 1)
+    table.merge_lww(
+        spark,
+        spark.createDataFrame(
+            [(f"u{i}", ts, i, "c", 0, "kept") for i in range(10)], _R3_SCHEMA
+        ),
+        epoch_id=0,
+    )
+    victim = sorted(_live_files(table))[0]
+    t = pq.read_table(victim)
+    t = t.set_column(
+        t.schema.get_field_index("pos"), "pos", pa.array([10**6] * t.num_rows)
+    ).set_column(
+        t.schema.get_field_index("text"), "text", pa.array(["orphan"] * t.num_rows)
+    )
+    orphan = os.path.join(os.path.dirname(victim), "part-orphan.parquet")
+    pq.write_table(t, orphan)
+    keys = t.column("url").to_pylist()
+
+    assert orphan not in _live_files(table)
+    assert {r["text"] for r in table.read(spark).collect()} == {"kept"}
+    assert orphan not in table.files_for_keys(spark, keys)
+    assert {r["text"] for r in table.read_keys(spark, keys).collect()} == {"kept"}
+    assert table.vacuum() == 1
+    assert not os.path.exists(orphan) and os.path.exists(victim)
+    assert table.read(spark).count() == 10

@@ -157,62 +157,6 @@ def test_vacuum_records_expired_ids_no_existence_walk(spark, tmp_path):
         assert set(ids) <= live_jsons
 
 
-def test_split_file_bloom_partials_rebuild_exactly(spark, tmp_path):
-    """A file larger than maxPartitionBytes spans scan partitions; the
-    targeted second stats job must rebuild the SAME bloom the
-    single-partition path would have built (split files keep their pruning —
-    they'd otherwise lose it exactly where it matters most, big base files).
-    Forced by shrinking the session's split size so a small commit splits."""
-    import base64
-
-    from changedatacapture_spark.sinks.lake import (
-        _bloom_build,
-        _bloom_hash_pairs,
-        _bloom_insert,
-        _bloom_m_for,
-        _bloom_or,
-    )
-
-    # the rebuild math: fixed-m partial bitmaps OR'd in any order give the
-    # byte-identical bloom of the whole key set (bloom insertion commutes) --
-    # the r5 split-file path ships O(bitmap) partials, never per-key pairs
-    keys = [f"u{i}" for i in range(1000)]
-    m = _bloom_m_for(len(keys))
-    partial_b64 = []
-    for slc in (keys[:300], keys[300:]):
-        bits = bytearray(m // 8)
-        for h1, h2 in _bloom_hash_pairs(slc):
-            _bloom_insert(bits, m, h1, h2)
-        partial_b64.append(base64.b64encode(bytes(bits)).decode("ascii"))
-    assert _bloom_or(m, partial_b64[::-1]) == _bloom_build(keys)
-
-    # end-to-end: force multi-partition scans of the freshly written files
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    old_cost = spark.conf.get("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    try:
-        table = LakeTable(str(tmp_path / "s"), key="url", n_buckets=1)
-        table.merge_lww(
-            spark, spark.createDataFrame(_rows(800, 1), _SCHEMA), epoch_id=1
-        )
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-        spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
-    import pyarrow.parquet as pq
-
-    entries = [e for es in table._entries(table.current_snapshot()).values() for e in es]
-    assert entries
-    for e in entries:
-        ks = [
-            k
-            for k in pq.read_table(table._abs(e["p"]), columns=["url"]).column(0).to_pylist()
-            if k is not None
-        ]
-        assert e["bloom"] == _bloom_build(ks), "split-file bloom diverged"
-        assert e["rows"] == pq.ParquetFile(table._abs(e["p"])).metadata.num_rows
-
-
 def test_legacy_table_without_expired_list_adopts_on_open(spark, tmp_path):
     """A table vacuumed BEFORE the expired-ids list existed (round-3 layout)
     must not serve a reclaimed snapshot as a scan-time

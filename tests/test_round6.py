@@ -143,6 +143,33 @@ def test_set_feed_applied_mirror_equals_live_state(spark, tmp_path):
     assert mirror == live
 
 
+def test_feed_columns_checked_against_window_schema(spark, tmp_path):
+    """columns= is validated against the WINDOW's schema: a column evolved
+    after the window's end is refused, not silently dropped; a window that
+    holds the column serves it."""
+    t, base, _e1, until = _chunks_table(spark, tmp_path)
+    t.merge_sets(
+        spark,
+        spark.createDataFrame(
+            [("g", "c", _ts(20), 20, 0, 0, "g0", "tag-g")],
+            _SET_SCHEMA + ", x_tag string",
+        ),
+        epoch_id=3,
+        pre_reduced=True,
+    )
+    with pytest.raises(ValueError, match="unknown feed columns"):
+        t.read_changes(
+            spark, base, until, member_key="chunk_index",
+            columns=["content", "x_tag"],
+        )
+    got = t.read_changes(
+        spark, until, member_key="chunk_index", columns=["content", "x_tag"]
+    ).collect()
+    assert [(r["url"], r["content"], r["x_tag"]) for r in got] == [
+        ("g", "g0", "tag-g")
+    ]
+
+
 def test_set_feed_since_zero_is_insert_only(spark, tmp_path):
     t, base, _e1, until = _chunks_table(spark, tmp_path)
     rows = {
