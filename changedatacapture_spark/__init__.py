@@ -13,11 +13,12 @@ Architecture (see SURVEY.md for the full blueprint):
 - ``functions``  — vectorized pandas/Arrow UDFs (transform) and JVM-side
                    column expressions (text analysis, dedup, similarity)
 - ``operators``  — envelope projection, LWW dedup windows, salted two-phase
-                   LWW, batch fold, skew handling, schema evolution
+                   LWW, batch fold, schema evolution, field diffs, as-of joins
 - ``sinks``      — lake table with atomic snapshot commits, idempotent
                    epoch-keyed MERGE upserts, lineage
 - ``streaming``  — Structured Streaming driver (readStream → foreachBatch),
-                   checkpoint-resumable, exactly-once
+                   checkpoint-resumable, exactly-once; feed-driven mirrors
+                   (FeedMirror, VectorFeedMirror)
 """
 
 __version__ = "0.1.0"

@@ -151,8 +151,7 @@ EMBED_DIM = 384  # reference: all-MiniLM-L6-v2, 384-dim (main.py:1155-1160)
 
 def stub_embed_one(t: str | None) -> list[float] | None:
     """One text → one deterministic md5-arithmetic vector (the body of
-    ``embed_stub_udf``, shared with the real-model adapter's offline
-    fallback, functions/embed_adapter.py). ORACLE-PINNED: oracles_sql
+    ``embed_stub_udf``). ORACLE-PINNED: oracles_sql
     ``_embed_sql`` reproduces every float32 byte — change nothing here."""
     if t is None:
         return None
@@ -254,11 +253,6 @@ def content_hash_col(col: str = "text") -> F.Column:
     """md5 content hash for change-skip / idempotency keys
     (incremental_pinecone_updater.py:139-141) — JVM-side built-in, no UDF."""
     return F.md5(F.encode(F.col(col), "utf-8"))
-
-
-def extract_pages(df: DataFrame) -> DataFrame:
-    """html:binary → text:string on a pages-shaped DataFrame."""
-    return df.withColumn("text", extract_text_udf(F.col("html")))
 
 
 def chunk_pages(

@@ -1,1 +1,1 @@
-from . import apply, envelope, evolution, lww, skew  # noqa: F401
+from . import apply, envelope, evolution, lww  # noqa: F401

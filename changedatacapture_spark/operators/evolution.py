@@ -85,15 +85,3 @@ def infer_extra_types(deltas: DataFrame, cols: list[str]) -> dict[str, str]:
         else:
             out[c] = "string"
     return out
-
-
-def align_to_schema(df: DataFrame, columns: list[tuple[str, str]]) -> DataFrame:
-    """Project ``df`` onto a (name, ddl-type) column list, null-filling
-    missing columns — how old bucket files are read after the table widened
-    (parquet-level schema merge)."""
-    have = {f.name for f in df.schema.fields}
-    cols = [
-        F.col(name).cast(ddl).alias(name) if name in have else F.lit(None).cast(ddl).alias(name)
-        for name, ddl in columns
-    ]
-    return df.select(*cols)

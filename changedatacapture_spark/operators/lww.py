@@ -87,7 +87,7 @@ def lww_winners_salted(parsed: DataFrame, salt_buckets: int = 32) -> DataFrame:
 
     Note: because max_by already does map-side partial aggregation, explicit
     salting only pays off when a single url dominates entire *reduce* tasks;
-    both paths are exposed so the driver can pick per-batch (operators.skew).
+    both paths are exposed and ``CdcPipeline(salt_buckets=)`` picks one.
     """
     cols = [c for c in parsed.columns if c != "url"]
     phase1 = (

@@ -256,8 +256,7 @@ def cdc_noop_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cdc_events_per_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling rollup (integer hour buckets from epoch-micros so
-    the cross-engine compare is TZ-proof); the batch twin of
-    streaming.windows.change_rate."""
+    the cross-engine compare is TZ-proof)."""
     env = cdc_envelope(spark, sf_dir)
     return (
         env.groupBy(
@@ -279,8 +278,8 @@ def cdc_site_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdc_hot_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew probe: urls holding >1% of all events (operators.skew heavy-hitter
-    detection, exact version)."""
+    """Skew probe: urls holding >1% of all events (exact heavy-hitter
+    detection — the input to choosing ``CdcPipeline(salt_buckets=)``)."""
     env = cdc_envelope(spark, sf_dir)
     counts = env.groupBy("url").agg(F.count("*").alias("n"))
     # scalar total derived from the (already tiny) counts via a 1-row cross
@@ -350,8 +349,7 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap
 def cdc_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: consecutive events per url closer than the gap merge
     into one session (gaps-and-islands: lag + running sum — chosen over
-    ``session_window`` here because it is exactly mirrorable in ANSI SQL;
-    streaming.windows.url_sessions is the session_window-native form)."""
+    ``session_window`` here because it is exactly mirrorable in ANSI SQL)."""
     from pyspark.sql.window import Window
 
     env = cdc_envelope(spark, sf_dir)

@@ -8,9 +8,12 @@ the interface is exactly what an Iceberg backend would implement:
 - **Atomic commits**: each commit writes data files into an immutable
   ``data/commit-{snapshot}-{tag}/`` directory first, then publishes a
   snapshot JSON and atomically swaps the ``_meta/_current.json`` pointer
-  (``os.replace``). A crash between the two leaves only unreferenced files —
-  never a torn table (SURVEY.md §7 'idempotent commits without real
-  Iceberg').
+  (``os.replace``) under the publish flock. A crash between the two leaves
+  only unreferenced files — never a torn table (SURVEY.md §7 'idempotent
+  commits without real Iceberg'). With the epoch log below, commits are
+  atomic and exactly-once across a PROCESS crash. Nothing is fsynced: a
+  power loss or OS crash may lose or tear a commit the kernel had not yet
+  flushed, and that case is not covered.
 - **Optimistic concurrency (round 6)**: multiple writer PROCESSES are safe —
   the publish is a CAS on the snapshot id serialized by an advisory flock
   (``_publish``); a commit built against a superseded snapshot raises
@@ -1106,7 +1109,14 @@ class LakeTable:
         once for the eager pre-state probe and again when the returned plan
         is consumed — a deliberate trade so a polling consumer never
         accumulates driver-owned cache entries it cannot release
-        (ADVICE r5 low)."""
+        (ADVICE r5 low).
+
+        Side effect on the caller's session: every call sets
+        ``spark.sql.requireAllClusterKeysForCoPartition=false`` and leaves
+        it set. It is a planner-only switch, exact for equi-joins, that
+        keeps the member feed at one payload exchange per side; it also
+        applies to the session's other queries. Consume feeds from their
+        own session if those must keep Spark's default."""
         # subset co-partitioning (optimization round 7): the feed's member
         # diff joins on (key, member) and its event attach on key; with
         # Spark's default requireAllClusterKeysForCoPartition=true the

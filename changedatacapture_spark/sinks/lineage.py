@@ -123,24 +123,6 @@ class LineageLog:
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(d, "part-0.parquet"))
 
-    def record(
-        self,
-        lineage_df: DataFrame,
-        epoch_id: int,
-        *,
-        snapshot_id: int | None,
-        rows_applied: int | None = None,
-        wall_ms: int | None = None,
-    ) -> None:
-        out = lineage_df.withColumn(
-            "snapshot_id", F.lit(snapshot_id).cast("long")
-        ).withColumn("rows_applied", F.lit(rows_applied).cast("long")).withColumn(
-            "wall_ms", F.lit(wall_ms).cast("long")
-        )
-        out.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.path, f"epoch-{epoch_id:012d}")
-        )
-
     def read(self, spark) -> DataFrame | None:
         dirs = [
             os.path.join(self.path, d)

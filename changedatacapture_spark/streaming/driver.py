@@ -8,7 +8,7 @@ Shape:
 
 ``apply`` per micro-batch:
   1. parse envelope, drop tombstones (operators.envelope)
-  2. per-key LWW winners, salted when the batch is skewed (operators.lww/skew)
+  2. per-key LWW winners, salted when ``salt_buckets`` is set (operators.lww)
   3. schema evolution: promote new ``extra`` keys to columns (operators.evolution)
   4. pages MERGE (sinks.lake.merge_lww, merge-on-read append) — idempotent
   5. derived chunks for keys whose batch winner actually WON the pages merge
@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions import transform
 from ..operators import apply as apply_ops
-from ..operators import envelope, evolution, skew
+from ..operators import envelope, evolution
 from ..operators.lww import order_key_cols
 from ..sinks.lake import KeyProbe, LakeTable, build_key_probe
 from ..sinks.lineage import DeadLetterLog, LineageLog, partition_lineage
@@ -53,7 +53,6 @@ class CdcPipeline:
         *,
         n_buckets: int = 16,
         salt_buckets: int | None = None,
-        auto_salt: bool = False,
         with_chunks: bool = True,
         with_embeddings: bool = False,
         embed_fn=None,
@@ -62,7 +61,6 @@ class CdcPipeline:
         compact_every: int | None = None,
         compact_min_files: int | None = None,
         expire_keep: int | None = None,
-        ann_index=None,
         retention_snapshots: int = 0,
     ):
         # retention_snapshots: how many historical snapshots stay readable
@@ -88,7 +86,6 @@ class CdcPipeline:
         # when the source opts in (read_segments_jsonl(keep_corrupt=True))
         self.quarantine = DeadLetterLog(os.path.join(base_dir, "quarantine"))
         self.salt_buckets = salt_buckets
-        self.auto_salt = auto_salt
         self.with_chunks = with_chunks
         self.with_embeddings = with_embeddings
         self.embed_fn = embed_fn
@@ -106,14 +103,6 @@ class CdcPipeline:
         # table (expire_snapshots) — bounds _meta over long streams; None =
         # keep full time-travel history
         self.expire_keep = expire_keep
-        # optional functions.vector_index.IncrementalVectorIndex kept fresh
-        # per epoch off the same CDC stream (the reference's per-change
-        # vector-index upserts, main.py:1095-1102)
-        assert ann_index is None or with_embeddings, (
-            "ann_index requires with_embeddings=True — without embeddings the "
-            "index would never receive a vector"
-        )
-        self.ann_index = ann_index
         self.metrics: list[dict] = []
 
     # -- the foreachBatch body -------------------------------------------------
@@ -166,13 +155,11 @@ class CdcPipeline:
             us, pos = max((t["us"], t["pos"]) for t in t_orders)
             truncate = [1, us, pos]  # stream-class order key (op != 'r')
 
+        # note: the max_by LWW reduction partially aggregates map-side, so a
+        # hot url already collapses to ≤1 row per map partition before the
+        # shuffle; explicit salting only pays when single-url state within a
+        # map partition is itself the bottleneck. Off by default.
         salt = self.salt_buckets
-        if salt is None and self.auto_salt:
-            # note: the max_by LWW reduction partially aggregates map-side, so
-            # a hot url already collapses to ≤1 row per map partition before
-            # the shuffle; explicit salting only pays when single-url state
-            # within a map partition is itself the bottleneck. Off by default.
-            salt = skew.choose_salt_buckets(parsed)
 
         # pass 2: LWW winners (the only per-event shuffle), materialized
         # BEFORE the transform — fusing ArrowEvalPython onto the sort-
@@ -229,8 +216,8 @@ class CdcPipeline:
             probe_keys = None
             cur = None
             if self.with_chunks:
-                # only the chunks/index paths consume the probe — a pages-
-                # only pipeline must not pay this extra per-epoch job; one
+                # only the chunks path consumes the probe — a pages-only
+                # pipeline must not pay this extra per-epoch job; one
                 # probe covers BOTH tables (they share key + bucketing)
                 probe_keys = build_key_probe(
                     spark,
@@ -332,8 +319,6 @@ class CdcPipeline:
                 self.pages.compact(spark)
                 if self.with_chunks:
                     self.chunks.compact(spark)
-                if self.ann_index is not None:
-                    self.ann_index.compact(spark)
                 self._maybe_expire()
                 mark("compact", tick)
             elif self.compact_min_files:
@@ -341,11 +326,6 @@ class CdcPipeline:
                 if self.with_chunks:
                     did = (
                         self.chunks.compact(spark, min_files=self.compact_min_files)
-                        or did
-                    )
-                if self.ann_index is not None:
-                    did = (
-                        self.ann_index.compact(spark, min_files=self.compact_min_files)
                         or did
                     )
                 if did is not None:
@@ -368,8 +348,8 @@ class CdcPipeline:
 
     def reset_epoch_logs(self) -> None:
         """Adopt a NEW stream's epoch numbering for the WHOLE pipeline after
-        an intentional checkpoint wipe/re-point: resets pages, chunks, and
-        the ANN index table together. Per-table ``reset_epoch_log()`` calls
+        an intentional checkpoint wipe/re-point: resets pages and chunks
+        together. Per-table ``reset_epoch_log()`` calls
         are UNSAFE here — a table left un-reset keeps its old epoch floor
         and either raises ``StaleEpochError`` on every batch (chunks, which
         check strictly) or silently skips the new stream's epochs; this
@@ -377,8 +357,6 @@ class CdcPipeline:
         ``scripts/run_pipeline.py --adopt-new-stream``)."""
         self.pages.reset_epoch_log()
         self.chunks.reset_epoch_log()
-        if self.ann_index is not None:
-            self.ann_index.table.reset_epoch_log()
 
     def replay_dead_letters(self, spark: SparkSession, repair_fn=None) -> dict:
         """Repair-and-reinject quarantined rows through the NORMAL envelope →
@@ -411,8 +389,6 @@ class CdcPipeline:
         self.pages.expire_snapshots(keep_last=self.expire_keep)
         if self.with_chunks:
             self.chunks.expire_snapshots(keep_last=self.expire_keep)
-        if self.ann_index is not None:
-            self.ann_index.table.expire_snapshots(keep_last=self.expire_keep)
 
     # -- derived chunks ---------------------------------------------------------
 
@@ -510,16 +486,6 @@ class CdcPipeline:
             dels = changed.where(F.col("is_deleted") == 1).select("url", *_CHUNK_CARRY)
             tombs = dels.unionByName(no_chunk).withColumn("is_deleted", F.lit(1))
 
-            # keep the ANN index fresh BEFORE the chunks commit: the index's
-            # own epoch log makes the upsert exactly-once, and committing it
-            # first means a crash between the two commits replays into a
-            # chunks table that still holds the PRE-merge state the
-            # tombstone computation needs (index no-ops, chunks applies)
-            if self.ann_index is not None and self.with_embeddings:
-                self._apply_ann_index(
-                    spark, changed, emb_chunks, touched, epoch_id, probe_keys, truncate
-                )
-
             rows = emb_chunks.withColumn("is_deleted", F.lit(0)).unionByName(
                 tombs, allowMissingColumns=True
             )
@@ -532,51 +498,6 @@ class CdcPipeline:
                 chunked.unpersist()
             if j_emb is not None:
                 j_emb.unpersist()
-
-    def _apply_ann_index(
-        self,
-        spark: SparkSession,
-        changed: DataFrame,
-        emb_chunks: DataFrame,
-        touched: list[int],
-        epoch_id: int,
-        probe_keys: KeyProbe | None,
-        truncate: list | None = None,
-    ) -> None:
-        """One index epoch: the changed urls' new vectors upsert into their
-        LSH buckets; their PREVIOUS chunks (read from the pre-merge chunks
-        table, bloom-pruned to the batch's urls) tombstone wherever they
-        moved buckets or disappeared — including full url deletes. O(changed
-        vectors) writes, no index reads (incremental_pinecone_updater.py
-        update/delete routing, merge-on-read)."""
-        replaced = None
-        if self.ann_index.dim is not None:
-            # an index that has never stored a vector has no stale rows
-            old = self.chunks.read_bucket_winners(
-                spark,
-                touched,
-                columns=["chunk_id", "embedding", "is_deleted"],
-                probe_keys=probe_keys,
-            )
-            if old is not None and {"chunk_id", "embedding"}.issubset(old.columns):
-                o = old.where(
-                    (F.coalesce(F.col("is_deleted"), F.lit(0)) == 0)
-                    & F.col("embedding").isNotNull()
-                ).select("url", "chunk_id", F.col("embedding").alias("_old_emb"))
-                orders = changed.select("url", "op", "warc_ts", "pos")
-                replaced = (
-                    o.join(orders, "url")
-                    .withColumn("bucket", self.ann_index.bucket_of("_old_emb"))
-                    .select("chunk_id", "url", "op", "warc_ts", "pos", "bucket")
-                )
-        new_vecs = emb_chunks.select(
-            "chunk_id", "url", "op", "warc_ts", "pos", "embedding"
-        )
-        # the truncate horizon must reach the index too: vectors of urls NOT
-        # in this batch die by horizon, exactly like their chunks-table rows
-        self.ann_index.upsert(
-            spark, new_vecs, replaced, epoch_id=epoch_id, truncate=truncate
-        )
 
     def _embed_with_reuse(
         self,
@@ -755,18 +676,6 @@ class MultiTablePipeline:
     """
 
     def __init__(self, base_dir: str, tables: list[str], **pipeline_kwargs):
-        if "ann_index" in pipeline_kwargs:
-            # a single index instance shared by every per-table pipeline
-            # would interleave overlapping urls/chunk_ids from different
-            # tables in ONE epoch log + table and silently corrupt it —
-            # assign per-table indexes after construction instead
-            # (``multi[t].ann_index = ...``, the scripts/run_pipeline.py
-            # pattern: one IncrementalVectorIndex per table).
-            raise ValueError(
-                "MultiTablePipeline does not accept ann_index: one index "
-                "cannot serve several tables. Set a per-table index via "
-                "pipeline[table].ann_index = IncrementalVectorIndex(...)"
-            )
         self.tables = [t.strip() for t in tables if t and t.strip()]
         # the stream watermark belongs to the ONE shared StreamingQuery —
         # honor the same kwarg the per-table pipelines receive

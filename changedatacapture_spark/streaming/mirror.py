@@ -56,6 +56,23 @@ from ..sinks.lake import ChangeFeedUnavailableError, LakeTable
 _MEMBER_SEP = "\x00"
 
 
+def _feed_cursor(table: LakeTable) -> int:
+    """Last consumed source snapshot id (durable: recorded in the mirror
+    table's snapshot meta by every apply; 0 = never synced)."""
+    snap = table.current_snapshot()
+    return int((snap or {}).get("meta", {}).get("feed_cursor", 0))
+
+
+def _next_epoch(table: LakeTable) -> int:
+    """A fresh epoch id above every logged id and the floor."""
+    snap = table.current_snapshot()
+    if snap is None:
+        return 0
+    eps = [int(e) for e in snap.get("epochs", {})]
+    floor = int(snap.get("epoch_floor", -1))
+    return max(eps + [floor]) + 1
+
+
 class FeedMirror:
     def __init__(
         self,
@@ -81,22 +98,9 @@ class FeedMirror:
             self.path, key=key, n_buckets=self.n_buckets, mode="row"
         )
 
-    # -- cursor ----------------------------------------------------------------
-
     @property
     def cursor(self) -> int:
-        """Last consumed source snapshot id (durable: recorded in the mirror
-        snapshot's meta by every apply; 0 = never synced)."""
-        snap = self.table.current_snapshot()
-        return int((snap or {}).get("meta", {}).get("feed_cursor", 0))
-
-    def _next_epoch(self) -> int:
-        snap = self.table.current_snapshot()
-        if snap is None:
-            return 0
-        eps = [int(e) for e in snap.get("epochs", {})]
-        floor = int(snap.get("epoch_floor", -1))
-        return max(eps + [floor]) + 1
+        return _feed_cursor(self.table)
 
     # -- sync ------------------------------------------------------------------
 
@@ -159,7 +163,7 @@ class FeedMirror:
             self.table.merge_lww(
                 spark,
                 empty,
-                epoch_id=self._next_epoch(),
+                epoch_id=_next_epoch(self.table),
                 pre_reduced=True,
                 truncate=horizon,
                 extra_meta=meta,
@@ -181,7 +185,7 @@ class FeedMirror:
             spark,
             upserts,
             rows.select(key),
-            epoch_id=self._next_epoch(),
+            epoch_id=_next_epoch(self.table),
             truncate=horizon,
             extra_meta=meta,
         )
@@ -295,16 +299,7 @@ class VectorFeedMirror:
 
     @property
     def cursor(self) -> int:
-        snap = self.index.table.current_snapshot()
-        return int((snap or {}).get("meta", {}).get("feed_cursor", 0))
-
-    def _next_epoch(self) -> int:
-        snap = self.index.table.current_snapshot()
-        if snap is None:
-            return 0
-        eps = [int(e) for e in snap.get("epochs", {})]
-        floor = int(snap.get("epoch_floor", -1))
-        return max(eps + [floor]) + 1
+        return _feed_cursor(self.index.table)
 
     def sync(self, spark: SparkSession) -> str:
         """One consumer poll. Returns 'noop' | 'applied' | 'resync'."""
@@ -335,8 +330,9 @@ class VectorFeedMirror:
         except ChangeFeedUnavailableError:
             self.resync(spark)
             return "resync"
-        horizon = (self.source.snapshot(until) or {}).get("truncate")
-        self._apply(spark, feed, until, horizon)
+        # cur IS the until snapshot: a second snapshot(until) lookup could
+        # race its expiry and silently drop the horizon
+        self._apply(spark, feed, until, cur.get("truncate"))
         return "applied"
 
     def _apply(self, spark: SparkSession, feed: DataFrame | None, until: int,
@@ -353,7 +349,7 @@ class VectorFeedMirror:
                 "pos long, embedding array<float>",
             )
             self.index.upsert(
-                spark, empty, None, epoch_id=self._next_epoch(),
+                spark, empty, None, epoch_id=_next_epoch(self.index.table),
                 truncate=horizon, extra_meta=meta,
             )
             return
@@ -384,7 +380,7 @@ class VectorFeedMirror:
                     )
                 )
             self.index.upsert(
-                spark, new_vecs, replaced, epoch_id=self._next_epoch(),
+                spark, new_vecs, replaced, epoch_id=_next_epoch(self.index.table),
                 truncate=horizon, extra_meta=meta,
             )
         finally:

@@ -3,8 +3,12 @@
     spark-submit --py-files dist/changedatacapture_spark.zip \
         scripts/run_pipeline.py --segments DIR --lake DIR --checkpoint DIR \
         [--tail] [--buckets N] [--max-files N] [--embeddings] \
-        [--tables pages,authors] [--ann-index DIR] \
+        [--tables pages,authors] \
         [--compact-min-files K] [--expire-keep N] [--adopt-new-stream]
+
+A vector index is kept fresh by running scripts/run_mirror.py
+--vector-index beside this stream; a consumer lagging past the lake's
+retention window falls back to a full re-sync.
 """
 
 from __future__ import annotations
@@ -41,11 +45,6 @@ def main():
         help="comma-separated source tables for a MIXED feed (routes on source.table)",
     )
     ap.add_argument(
-        "--ann-index", default=None,
-        help="path of an IncrementalVectorIndex kept fresh per epoch (implies --embeddings)",
-    )
-    ap.add_argument("--ann-planes", type=int, default=8)
-    ap.add_argument(
         "--adopt-new-stream", action="store_true",
         help="explicitly adopt a NEW stream's epoch numbering against the "
         "existing lake (after an intentional checkpoint wipe/re-point): "
@@ -72,10 +71,6 @@ def main():
     from changedatacapture_spark.streaming.driver import CdcPipeline, MultiTablePipeline
 
     spark = SparkSession.builder.appName("cdc-ingest").getOrCreate()
-    if args.ann_index:
-        from changedatacapture_spark.functions.vector_index import IncrementalVectorIndex
-
-        args.embeddings = True
     kwargs = dict(
         n_buckets=args.buckets,
         with_chunks=True,
@@ -88,21 +83,8 @@ def main():
     if args.tables:
         tables = [t.strip() for t in args.tables.split(",") if t.strip()]
         pipe = MultiTablePipeline(args.lake, tables, **kwargs)
-        if args.ann_index:
-            # one index PER table: urls (hence chunk_ids) may overlap across
-            # source tables, and each table owns its own epoch log
-            import os as _os
-
-            for t in tables:
-                pipe[t].ann_index = IncrementalVectorIndex(
-                    _os.path.join(args.ann_index, t), n_planes=args.ann_planes
-                )
     else:
         pipe = CdcPipeline(args.lake, **kwargs)
-        if args.ann_index:
-            pipe.ann_index = IncrementalVectorIndex(
-                args.ann_index, n_planes=args.ann_planes
-            )
     if args.adopt_new_stream:
         pipe.reset_epoch_logs()
     if args.replay_dead_letters:

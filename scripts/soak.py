@@ -4,14 +4,15 @@ crash-restart, verified byte-level against the sequential oracles.
 500k (default; --events) mixed events over two source tables (overlapping
 urls), truncates,
 schema evolution, hot-url skew, dup deliveries, late events; pipeline runs
-with embeddings + per-table incremental ANN indexes + read-cost-keyed
-auto-compaction + snapshot expiry. Phase 1 sees only half the binlog
+with embeddings + read-cost-keyed auto-compaction + snapshot expiry, and
+per-table feed mirrors (pages, chunks, vectors) synced after every phase. Phase 1 sees only half the binlog
 segments; phase 2 restarts from the same checkpoint with FRESH pipeline
 objects and drains the rest. Asserts, per table:
 
 - pages text ≡ oracle fold (incl. truncate clears)
 - chunks ≡ oracle chunker over the fold state
-- ANN index live (chunk_id → rows) ≡ chunks-table live set
+- every feed mirror, the VectorFeedMirror index included, ≡ its source's
+  live set (diff_vs_source == 0)
 - delta stacks bounded by compact_min_files; snapshots bounded by expire_keep
 - each engine phase lands inside its wall-clock budget (--phase-budget-sec;
   scaled from measured 16-core timings ×2 headroom) — the soak doubles as a
@@ -51,10 +52,8 @@ def main():
               else 200.0 + args.events * 1.2e-3)
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     from changedatacapture_spark import gen, oracle
-    from changedatacapture_spark.functions.vector_index import IncrementalVectorIndex
     from changedatacapture_spark.streaming.driver import MultiTablePipeline
 
     os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
@@ -110,13 +109,10 @@ def main():
             retention_snapshots=6,
         )
         for t in tables:
-            m[t].ann_index = IncrementalVectorIndex(
-                os.path.join(wd, "ix", t), n_planes=4
-            )
             # small idempotency windows so the run EXERCISES the eviction
             # floor (and phase 3's re-point lands below it — with the
             # default 1000-epoch window a ~16-epoch soak never would)
-            for lk in (m[t].pages, m[t].chunks, m[t].ann_index.table):
+            for lk in (m[t].pages, m[t].chunks):
                 lk.epoch_window = 4
         return m
 
@@ -347,24 +343,8 @@ def main():
                     f"e.g. {sorted(only_m | only_l)[:2]})"
                 )
 
-        ch = pipe.chunks.read(spark)
-        exp_ids = (
-            set()
-            if ch is None
-            else {r["chunk_id"] for r in ch.where(F.col("embedding").isNotNull()).collect()}
-        )
-        got_ids = {r["chunk_id"] for r in _rows(pipe.ann_index.live_rows(spark))}
-        if got_ids != exp_ids:
-            failures.append(
-                f"{t}: index diverged (+{len(got_ids - exp_ids)}/-{len(exp_ids - got_ids)})"
-            )
-
         # maintenance bounds hold on EVERY maintained table, not just pages
-        for name, lk in (
-            ("pages", pipe.pages),
-            ("chunks", pipe.chunks),
-            ("index", pipe.ann_index.table),
-        ):
+        for name, lk in (("pages", pipe.pages), ("chunks", pipe.chunks)):
             mf = lk.max_files_per_bucket()
             if mf > 6:
                 failures.append(f"{t}/{name}: delta stack {mf} exceeds compact_min_files")
@@ -376,7 +356,7 @@ def main():
         mf = pipe.pages.max_files_per_bucket()
         print(
             f"[soak] {t}: pages={len(pages)} chunks={sum(len(v) for v in got_chunks.values())} "
-            f"index={len(got_ids)} max_files/bucket={mf} "
+            f"max_files/bucket={mf} "
             f"snapshots={len(pipe.pages.snapshot_ids())} "
             f"truncate={pipe.pages.current_snapshot().get('truncate') is not None}",
             flush=True,
@@ -386,7 +366,7 @@ def main():
         print("[soak] FAILED:\n  " + "\n  ".join(failures))
         sys.exit(1)
     print(f"[soak] PASS — {args.events} events, all tables byte-exact vs oracle, "
-          f"index consistent, maintenance bounds held across crash-restart, "
+          f"mirrors consistent, maintenance bounds held across crash-restart, "
           f"phases {phase1_sec:.0f}s/{phase2_sec:.0f}s within budget {budget:.0f}s")
     shutil.rmtree(wd, ignore_errors=True)
     spark.stop()

@@ -1,10 +1,10 @@
-"""Field-diff operators (J2/F3/F4) and file-folder sources (S8/S9)."""
+"""Field-diff operators (J2/F3/F4), lake compaction and the Kafka record
+projection."""
 
 import datetime as dt
 
 from changedatacapture_spark.operators import diff
 from changedatacapture_spark.schemas import ENVELOPE_SCHEMA
-from changedatacapture_spark.sources import files
 
 
 def _env(spark):
@@ -66,28 +66,6 @@ def test_format_content_skips_nulls(spark):
     df = spark.createDataFrame([("a", None, "en")], "url string, text string, lang string")
     out = diff.format_content(df, ["url", "text", "lang"]).first()["content"]
     assert out == "url: a\nlang: en"
-
-
-def test_read_text_folder(spark, tmp_path):
-    (tmp_path / "a.txt").write_text("1. Title\nbody\n")
-    (tmp_path / "b.txt").write_text("plain\n")
-    (tmp_path / "skip.bin").write_bytes(b"\x00")
-    df = files.read_text_folder(spark, str(tmp_path))
-    rows = {r["url"].split("/")[-1]: r["text"] for r in df.collect()}
-    assert set(rows) == {"a.txt", "b.txt"}
-    assert rows["a.txt"] == "1. Title\nbody\n"
-
-
-def test_read_binary_folder_feeds_transform(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from changedatacapture_spark import oracle
-    from changedatacapture_spark.functions import transform
-
-    (tmp_path / "p.html").write_bytes(b"<html><h2>1. T</h2><p>body</p></html>")
-    df = files.read_binary_folder(spark, str(tmp_path), glob="*.html")
-    out = df.select(transform.extract_text_udf(F.col("html")).alias("text")).first()["text"]
-    assert out == oracle.html_to_text(b"<html><h2>1. T</h2><p>body</p></html>")
 
 
 def test_lake_compaction(spark, tmp_path):

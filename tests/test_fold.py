@@ -6,7 +6,7 @@ import pytest
 
 from changedatacapture_spark import gen, oracle
 from changedatacapture_spark.operators import apply as apply_ops
-from changedatacapture_spark.operators import envelope, lww, skew
+from changedatacapture_spark.operators import envelope, lww
 
 
 def _spark_state(spark, seg_dir, salt_buckets=None):
@@ -43,9 +43,6 @@ def test_fold_with_hot_key_skew_and_salting(spark, tmp_path, testdata_dir):
     events = gen.generate_small(
         seg_dir, n_urls=40, n_events=600, seed=3, hot_frac=0.5, testdata_dir=testdata_dir
     )
-    parsed = envelope.parse_envelope(envelope.read_segments(spark, seg_dir))
-    hot = skew.detect_hot_keys(parsed, sample_fraction=1.0)
-    assert gen._url(0) in hot  # the hot url must be detected
     # salted two-phase LWW ≡ unsalted ≡ oracle
     _assert_matches_oracle(_spark_state(spark, seg_dir, salt_buckets=8), events)
     _assert_matches_oracle(_spark_state(spark, seg_dir), events)

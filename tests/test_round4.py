@@ -7,7 +7,7 @@
 - vacuum records expired snapshot ids so time-travel expiry is an O(1)
   membership test, not an O(total files) existence walk;
 - MultiTablePipeline scans the raw batch ONCE for T tables (slices read the
-  cache) and rejects a shared ann_index;
+  cache);
 - IncrementalVectorIndex.build never occupies stream epoch 0;
 - generator truncate events honor the snapshot-first ts contract.
 """
@@ -210,17 +210,6 @@ def test_multitable_slices_read_cache_not_raw_segments(spark, tmp_path, testdata
     assert set(plans) == {"pages", "authors"}
     for t, plan in plans.items():
         assert "InMemoryRelation" in plan, f"{t} slice bypasses the cache:\n{plan}"
-
-
-def test_multitable_rejects_shared_ann_index(tmp_path):
-    """ADVICE r3: one index instance shared across tables would corrupt its
-    epoch log — the constructor must refuse the kwarg."""
-    with pytest.raises(ValueError, match="ann_index"):
-        MultiTablePipeline(
-            str(tmp_path / "lake"),
-            ["pages", "authors"],
-            ann_index=object(),
-        )
 
 
 def test_index_build_does_not_occupy_stream_epoch_zero(spark, tmp_path):

@@ -149,21 +149,18 @@ def test_auto_compaction_bounds_delta_stacks(spark, tmp_path, testdata_dir):
 
 
 def test_stream_maintenance_covers_index_and_expiry(spark, tmp_path, testdata_dir):
-    """compact_every + expire_keep maintain the ANN index table and bound
-    _meta alongside the data lakes; state stays oracle-correct."""
-    from changedatacapture_spark.functions.vector_index import IncrementalVectorIndex
+    """compact_every + expire_keep fold the pages/chunks delta stacks and
+    bound _meta; state stays oracle-correct."""
     from changedatacapture_spark.streaming.driver import CdcPipeline
 
     seg_dir = str(tmp_path / "log")
     events = gen.generate_small(
         seg_dir, n_urls=25, n_events=160, seed=53, n_segments=6, testdata_dir=testdata_dir
     )
-    idx = IncrementalVectorIndex(str(tmp_path / "ix"), n_planes=4)
     pipe = CdcPipeline(
         str(tmp_path / "lake"),
         n_buckets=4,
         with_embeddings=True,
-        ann_index=idx,
         compact_every=2,
         expire_keep=3,
     )
@@ -171,12 +168,6 @@ def test_stream_maintenance_covers_index_and_expiry(spark, tmp_path, testdata_di
         spark, seg_dir, str(tmp_path / "ckpt"), max_files_per_trigger=1, timeout_sec=300
     )
     assert len(pipe.pages.snapshot_ids()) <= 4  # expiry bounded _meta
-    assert idx.table.max_files_per_bucket() <= 3  # index compacted too
+    assert len(pipe.chunks.snapshot_ids()) <= 4
+    assert pipe.chunks.max_files_per_bucket() <= 3  # chunks compacted too
     _check_final(spark, pipe, events)
-    # index still consistent with chunks after compaction + expiry
-    from pyspark.sql import functions as F
-
-    exp = {r["chunk_id"] for r in pipe.chunks.read(spark)
-           .where(F.col("embedding").isNotNull()).collect()}
-    got = {r["chunk_id"] for r in idx.live_rows(spark).collect()}
-    assert got == exp

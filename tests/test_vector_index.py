@@ -4,6 +4,7 @@ rebuild, moved vectors leave no stale rows, and a full compaction never
 drops a live row (the live-wins tie-break pin)."""
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
@@ -11,6 +12,7 @@ from changedatacapture_spark import gen
 from changedatacapture_spark.functions import similarity
 from changedatacapture_spark.functions.vector_index import IncrementalVectorIndex
 from changedatacapture_spark.streaming.driver import CdcPipeline
+from changedatacapture_spark.streaming.mirror import VectorFeedMirror
 
 TS = dt.datetime(2024, 1, 1)
 _ROWS_DDL = (
@@ -106,34 +108,29 @@ def test_cdc_update_and_delete_visible_without_rebuild(spark, tmp_path):
 
 
 def test_pipeline_keeps_index_consistent_with_chunks_table(spark, tmp_path, testdata_dir):
-    """End-to-end: CdcPipeline(ann_index=...) — after a multi-epoch stream
-    with creates/updates/deletes, the index's live (chunk_id → vector) set
-    EQUALS the chunks table's live set, and a stored chunk's embedding finds
-    its own chunk_id at cosine 1.0 with no rebuild."""
+    """End-to-end: a VectorFeedMirror synced after a multi-epoch stream with
+    creates/updates/deletes holds exactly the chunks table's live (chunk_id,
+    vector) set, and a stored chunk's embedding finds its own chunk_id at
+    cosine 1.0 with no rebuild."""
     seg_dir = str(tmp_path / "log")
     gen.generate_small(
         seg_dir, n_urls=25, n_events=160, seed=41, n_segments=6, testdata_dir=testdata_dir
     )
-    idx = IncrementalVectorIndex(str(tmp_path / "ix"), n_planes=4)
-    pipe = CdcPipeline(
-        str(tmp_path / "lake"), n_buckets=4, with_embeddings=True, ann_index=idx
-    )
+    pipe = CdcPipeline(str(tmp_path / "lake"), n_buckets=4, with_embeddings=True)
     pipe.run_stream(
         spark, seg_dir, str(tmp_path / "ckpt"), max_files_per_trigger=2, timeout_sec=300
     )
+    vm = VectorFeedMirror(pipe.chunks, str(tmp_path / "ix"), n_planes=4)
+    assert vm.sync(spark) == "applied"
+    assert vm.diff_vs_source(spark) == 0
 
-    chunks = pipe.chunks.read(spark).where(F.col("embedding").isNotNull())
-    exp = {r["chunk_id"]: [round(float(x), 5) for x in r["embedding"]]
-           for r in chunks.collect()}
-    got = {r["chunk_id"]: [round(float(x), 5) for x in r["embedding"]]
-           for r in idx.live_rows(spark).collect()}
-    assert got == exp, (
-        f"index diverged: {len(got)} live vs {len(exp)} chunks; "
-        f"only-in-index={set(got) - set(exp)} only-in-chunks={set(exp) - set(got)}"
+    probe = (
+        pipe.chunks.read(spark)
+        .where(F.col("embedding").isNotNull())
+        .select("chunk_id", "embedding")
+        .first()
     )
-
-    probe = chunks.select("chunk_id", "embedding").first()
-    res = idx.search(spark, [float(x) for x in probe["embedding"]], k=1).collect()
+    res = vm.index.search(spark, [float(x) for x in probe["embedding"]], k=1).collect()
     assert res and res[0]["chunk_id"] == probe["chunk_id"]
     assert res[0]["cos_micro"] == 1_000_000
 
@@ -181,7 +178,7 @@ def test_incremental_index_neardup_recall_sf01(spark, tmp_path):
 def test_truncate_reaches_the_index(spark, tmp_path, testdata_dir):
     """Code-review r3 fix: a TRUNCATE horizon must kill index vectors of
     urls the batch never mentions — unit (upsert(truncate=)) and end-to-end
-    (pipeline with truncates keeps index ≡ chunks live set)."""
+    (a feed-driven index synced across a truncate ≡ chunks live set)."""
     # unit: u1 stored, truncate arrives with only u2's new vector
     idx = IncrementalVectorIndex(str(tmp_path / "ixu"), n_planes=3, dim=4)
     e1, e2 = [1.0, 0.2, -0.3, 0.5], [0.1, 1.0, 0.4, -0.2]
@@ -200,7 +197,8 @@ def test_truncate_reaches_the_index(spark, tmp_path, testdata_dir):
     live = {r["chunk_id"] for r in idx.live_rows(spark).collect()}
     assert live == {"u2_chunk_0"}, f"pre-truncate vector survived: {live}"
 
-    # end-to-end: stream with truncates, index must track the chunks table
+    # end-to-end: a VectorFeedMirror synced mid-stream, then across a window
+    # holding a TRUNCATE, must track the chunks table
     seg_dir = str(tmp_path / "log")
     gen.generate_small(
         seg_dir,
@@ -211,20 +209,24 @@ def test_truncate_reaches_the_index(spark, tmp_path, testdata_dir):
         n_segments=4,
         testdata_dir=testdata_dir,
     )
-    idx2 = IncrementalVectorIndex(str(tmp_path / "ix2"), n_planes=4)
-    pipe = CdcPipeline(
-        str(tmp_path / "lake"), n_buckets=4, with_embeddings=True, ann_index=idx2
-    )
-    pipe.run_stream(
-        spark, seg_dir, str(tmp_path / "ckpt"), max_files_per_trigger=1, timeout_sec=300
-    )
-    exp = {r["chunk_id"] for r in pipe.chunks.read(spark)
-           .where(F.col("embedding").isNotNull()).collect()}
-    got = {r["chunk_id"] for r in idx2.live_rows(spark).collect()}
-    assert got == exp, (
-        f"index diverged under truncate: only-in-index={got - exp} "
-        f"only-in-chunks={exp - got}"
-    )
+    later = sorted(os.listdir(seg_dir))[1:]
+    os.makedirs(tmp_path / "held")
+    for f in later:
+        os.rename(os.path.join(seg_dir, f), str(tmp_path / "held" / f))
+    pipe = CdcPipeline(str(tmp_path / "lake"), n_buckets=4, with_embeddings=True)
+    ckpt = str(tmp_path / "ckpt")
+    pipe.run_stream(spark, seg_dir, ckpt, max_files_per_trigger=1, timeout_sec=300)
+    vm = VectorFeedMirror(pipe.chunks, str(tmp_path / "ix2"), n_planes=4)
+    assert vm.sync(spark) == "applied"
+    first = pipe.chunks.current_snapshot()["truncate"]
+    for f in later:
+        os.rename(str(tmp_path / "held" / f), os.path.join(seg_dir, f))
+    pipe.run_stream(spark, seg_dir, ckpt, max_files_per_trigger=1, timeout_sec=300)
+    horizon = pipe.chunks.current_snapshot()["truncate"]
+    assert horizon > first  # a later truncate lands inside the second window
+    assert vm.sync(spark) == "applied"
+    assert vm.index.table.current_snapshot()["truncate"] == horizon
+    assert vm.diff_vs_source(spark) == 0
 
 
 def test_ivf_mode_incremental_update(spark, tmp_path, testdata_dir):

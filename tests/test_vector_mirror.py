@@ -149,10 +149,9 @@ def test_row_feed_preimage_null_for_evolved_after_since(spark, tmp_path):
 
 @pytest.fixture(scope="module")
 def vm_world(spark, tmp_path_factory):
-    """One streamed pipeline (embeddings + synchronous ANN index) plus a
-    feed-driven VectorFeedMirror synced across two event waves."""
+    """One streamed pipeline (embeddings) plus a feed-driven
+    VectorFeedMirror synced across two event waves."""
     from changedatacapture_spark import gen
-    from changedatacapture_spark.functions.vector_index import IncrementalVectorIndex
     from changedatacapture_spark.streaming.driver import CdcPipeline
     from changedatacapture_spark.streaming.mirror import VectorFeedMirror
 
@@ -161,10 +160,8 @@ def vm_world(spark, tmp_path_factory):
         f"{W}/binlog", n_urls=60, n_events=600, seed=7, hot_frac=0.3,
         testdata_dir="/root/testdata/sf0.001",
     )
-    idx = IncrementalVectorIndex(f"{W}/sync_index", n_planes=4)
     pipe = CdcPipeline(
-        f"{W}/lake", n_buckets=8, with_embeddings=True, ann_index=idx,
-        retention_snapshots=32,
+        f"{W}/lake", n_buckets=8, with_embeddings=True, retention_snapshots=32
     )
     pipe.run_stream(
         spark, f"{W}/binlog", f"{W}/ckpt", max_files_per_trigger=3,
@@ -181,30 +178,16 @@ def vm_world(spark, tmp_path_factory):
         shutil.copy(f, f"{W}/binlog/z_" + os.path.basename(f))
     pipe.run_stream(spark, f"{W}/binlog", f"{W}/ckpt", timeout_sec=300)
     assert vm.sync(spark) == "applied"
-    return pipe, idx, vm, W
-
-
-def _index_delta(a, b):
-    a = a.select("chunk_id", "embedding")
-    b = b.select("chunk_id", "embedding")
-    return a.exceptAll(b).count() + b.exceptAll(a).count()
+    return pipe, vm, W
 
 
 def test_vector_mirror_equals_source_vectors(spark, vm_world):
-    _, _, vm, _ = vm_world
+    _, vm, _ = vm_world
     assert vm.diff_vs_source(spark) == 0
 
 
-def test_vector_mirror_equals_synchronous_index(spark, vm_world):
-    """The feed-driven index and the pipeline's in-process index converge to
-    the identical live vector set — two independent consumers of the same
-    changes (one synchronous, one via read_changes preimages)."""
-    _, idx, vm, _ = vm_world
-    assert _index_delta(idx.live_rows(spark), vm.index.live_rows(spark)) == 0
-
-
 def test_vector_mirror_search_parity(spark, vm_world):
-    _, _, vm, _ = vm_world
+    _, vm, _ = vm_world
     row = vm.index.live_rows(spark).first()
     hit = vm.index.search(
         spark, [float(x) for x in row["embedding"]], k=1
@@ -215,7 +198,7 @@ def test_vector_mirror_search_parity(spark, vm_world):
 def test_vector_mirror_restart_resumes_cursor(spark, vm_world):
     from changedatacapture_spark.streaming.mirror import VectorFeedMirror
 
-    pipe, _, vm, W = vm_world
+    pipe, vm, W = vm_world
     vm2 = VectorFeedMirror(pipe.chunks, f"{W}/mirror_index", n_planes=4)
     assert vm2.cursor == vm.cursor > 0
     assert vm2.sync(spark) == "noop"
@@ -227,7 +210,7 @@ def test_vector_mirror_resyncs_after_vacuum(spark, vm_world):
     mirror must fall back to a full rebuild and still equal the source."""
     from changedatacapture_spark.streaming.mirror import VectorFeedMirror
 
-    pipe, _, _, W = vm_world
+    pipe, _, W = vm_world
     pipe.chunks.retention_snapshots = 0
     pipe.chunks.compact(spark)
     pipe.chunks.vacuum()
@@ -235,6 +218,57 @@ def test_vector_mirror_resyncs_after_vacuum(spark, vm_world):
     # force a non-empty window: one more chunks commit after the vacuum
     assert vm2.sync(spark) in ("resync", "noop")
     assert vm2.diff_vs_source(spark) == 0
+
+
+def test_vector_mirror_horizon_survives_snapshot_expiry(spark, tmp_path, monkeypatch):
+    """The truncate horizon comes from the snapshot the sync already holds:
+    if the source's ``until`` snapshot is expired right after the feed read
+    (``snapshot()`` then answers None), the index commit must still carry
+    the horizon — otherwise truncated urls' vectors stay live."""
+    from changedatacapture_spark.streaming.mirror import VectorFeedMirror
+
+    def vecs(urls, us):
+        return (
+            spark.createDataFrame([(u,) for u in urls], "url string")
+            .select(
+                "url",
+                F.lit("u").alias("op"),
+                F.timestamp_micros(F.lit(us)).alias("warc_ts"),
+                F.lit(us).cast("long").alias("pos"),
+                F.lit(0).alias("chunk_index"),
+                F.concat("url", F.lit("_chunk_0")).alias("chunk_id"),
+                F.transform(
+                    F.sequence(F.lit(1), F.lit(4)),
+                    lambda i: (F.xxhash64("url", i) % 1000).cast("float") / 1000.0,
+                ).alias("embedding"),
+                F.lit(0).alias("is_deleted"),
+            )
+        )
+
+    t = LakeTable(str(tmp_path / "c"), key="url", n_buckets=2, mode="set")
+    t.merge_sets(spark, vecs(["a", "b", "c"], 10), epoch_id=0, pre_reduced=True)
+    vm = VectorFeedMirror(t, str(tmp_path / "ix"), n_planes=3)
+    assert vm.sync(spark) == "applied"
+    # truncate at us=20 kills a/b/c; d arrives after it
+    horizon = [1, 20, 0]
+    t.merge_sets(
+        spark, vecs(["d"], 30), epoch_id=1, pre_reduced=True, truncate=horizon
+    )
+    assert t.current_snapshot()["truncate"] == horizon
+
+    read_changes = t.read_changes
+
+    def read_then_expire(*a, **kw):
+        out = read_changes(*a, **kw)
+        monkeypatch.setattr(t, "snapshot", lambda sid: None)
+        return out
+
+    monkeypatch.setattr(t, "read_changes", read_then_expire)
+    assert vm.sync(spark) == "applied"
+    monkeypatch.undo()
+    assert vm.index.table.current_snapshot().get("truncate") == horizon
+    assert {r["chunk_id"] for r in vm.index.live_rows(spark).collect()} == {"d_chunk_0"}
+    assert vm.diff_vs_source(spark) == 0
 
 
 # ------------------------------------------------------- persisted table mode
