@@ -14,7 +14,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
@@ -48,13 +49,13 @@ def main() -> int:
     ap.add_argument("--cores", type=int, default=8)
     args = ap.parse_args()
 
-    os.environ.setdefault("PYTHONPATH", "/root/repo")
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master(f"local[{args.cores}]")
         .config("spark.sql.shuffle.partitions", str(max(8, args.cores)))
-        .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+        # the python workers load the same checkout as this driver
+        .config("spark.executorEnv.PYTHONPATH", REPO)
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )

@@ -18,8 +18,9 @@ objects and drains the rest. Asserts, per table:
   scaled from measured 16-core timings ×2 headroom) — the soak doubles as a
   throughput-regression tripwire, not just a correctness one
 
-Usage: PYTHONPATH=/root/repo python scripts/soak.py [--events 500000]
-(not part of pytest — this is the long-running stress twin of the suite)
+Usage: python scripts/soak.py [--events 500000]
+(not part of pytest — this is the long-running stress twin of the suite; it
+puts its own checkout on the driver's and the workers' path)
 """
 
 from __future__ import annotations
