@@ -14,13 +14,17 @@ the interface is exactly what an Iceberg backend would implement:
   atomic and exactly-once across a PROCESS crash. Nothing is fsynced: a
   power loss or OS crash may lose or tear a commit the kernel had not yet
   flushed, and that case is not covered.
-- **Optimistic concurrency (round 6)**: multiple writer PROCESSES are safe —
-  the publish is a CAS on the snapshot id serialized by an advisory flock
-  (``_publish``); a commit built against a superseded snapshot raises
-  :class:`CommitConflictError`, append commits rebuild + retry inside
-  ``_commit``, and compact/replace_keys re-plan their whole body against
-  fresh state, so a maintenance job racing the streaming driver can never
-  drop either side's commit (tests/test_concurrency.py).
+- **Optimistic concurrency (round 6)**: multiple writer PROCESSES are safe.
+  Every write (``merge_lww``/``merge_sets``, ``replace_keys``, ``compact``,
+  ``reset_epoch_log``) is a planner run by ``_replan``: it reads the
+  current snapshot ONCE and derives everything — rows, file scope, schema,
+  epoch check, horizon and type folds — from that dict, and ``_commit``
+  publishes the result as that snapshot's successor. The publish is a CAS
+  on the snapshot id serialized by an advisory flock (``_publish``); if
+  another writer published in between, it raises
+  :class:`CommitConflictError` and the WHOLE planner re-runs against the
+  fresh snapshot, so a maintenance job racing the streaming driver can
+  never drop either side's commit (tests/test_concurrency.py).
 - **Idempotent epoch commits**: every snapshot records the ``epoch_id`` it
   applied; the write methods no-op when the epoch is already in the log — so
   ``foreachBatch`` replays after a crash are exactly-once (the reference is
@@ -76,8 +80,6 @@ Resolution modes (constructor ``mode``):
   duplicate deliveries of the same set (outside the epoch log's window) are
   broken deterministically by the commit file name — the newest commit's
   copy wins, never both.
-- ``"replace"`` — no resolution; the table is maintained by
-  ``replace_keys`` full-bucket rewrites only (reference SET1 semantics).
 
 Write contract: ``merge_lww``/``merge_sets`` reduce the batch to per-key
 winners/sets themselves by default (``pre_reduced=False``), so every data
@@ -131,6 +133,10 @@ _BLOOM_K = 7
 # files with more keys (post-compaction base files of huge buckets) get no
 # bloom and are conservatively always read
 _BLOOM_MAX_KEYS = 200_000
+# build_key_probe's dense-bucket cutoff (batch rows per bucket)
+_MAX_PROBES_PER_BUCKET = 384
+# attempts _replan makes before a CommitConflictError propagates
+_COMMIT_ATTEMPTS = 5
 
 
 def _bloom_hashes(key: str) -> tuple[int, int]:
@@ -210,7 +216,6 @@ def build_key_probe(
     key: str,
     tables: list[tuple["LakeTable", list[int]]],
     bucket_counts: dict[int, int] | None = None,
-    max_probes_per_bucket: int = 384,
     snapshots: dict[str, dict] | None = None,
 ) -> KeyProbe:
     """Executor-side file pruning for a batch's keys: ONE ``mapInPandas``
@@ -229,7 +234,7 @@ def build_key_probe(
     ``bucket_counts`` (per-bucket batch row counts, free from
     ``probe_batch``) gates the job on whether pruning is even possible:
     at ~1% bloom FP per probe, a file probed by p keys survives with
-    probability ≥ 1−0.99^p — above ``max_probes_per_bucket`` (default 384:
+    probability ≥ 1−0.99^p — above ``_MAX_PROBES_PER_BUCKET`` (384:
     survival ≥97.9%) essentially every file hits, so those buckets'
     candidates are skipped (files conservatively kept) and a batch that is
     dense in EVERY bucket runs no job at all. Dense batches thereby keep
@@ -239,7 +244,7 @@ def build_key_probe(
     n_buckets = tables[0][0].n_buckets
     dense = set()
     if bucket_counts is not None:
-        dense = {b for b, n in bucket_counts.items() if n > max_probes_per_bucket}
+        dense = {b for b, n in bucket_counts.items() if n > _MAX_PROBES_PER_BUCKET}
     cand: dict[int, list[tuple[int, int, int, bytes]]] = {}
     owner: list[str] = []  # fid → table path
     paths: list[str] = []  # fid → abs file path
@@ -334,10 +339,8 @@ class ChangeFeedUnavailableError(RuntimeError):
 class CommitConflictError(RuntimeError):
     """A snapshot publish lost the optimistic-concurrency race: another
     writer committed the same snapshot id first (see LakeTable._publish).
-    Append commits retry automatically inside ``_commit``; whole-table
-    operations (compact, replace_keys) re-plan against the fresh snapshot
-    and retry — their staged data files are unreferenced garbage that
-    ``vacuum`` reclaims."""
+    Every write operation re-plans against the fresh snapshot and retries
+    (``LakeTable._replan``); it surfaces only after the last attempt."""
 
 
 class StaleEpochError(RuntimeError):
@@ -365,7 +368,7 @@ class LakeTable:
         bucket_source: str = "key_hash",
         retention_snapshots: int = 0,
     ):
-        assert mode in ("row", "set", "replace")
+        assert mode in ("row", "set")
         assert bucket_source in ("key_hash", "column")
         # snapshots record paths relative to the table root, which is
         # absolutized here — a relative root would pin the table to the
@@ -407,7 +410,7 @@ class LakeTable:
         snap = self.current_snapshot()
         if snap is not None and "n_buckets" in snap:
             self.n_buckets = int(snap["n_buckets"])
-        # resolution semantics (row/set/replace) are layout too: like
+        # resolution semantics (row/set) are layout too: like
         # n_buckets, an existing table's persisted mode wins over the
         # constructor default, so reopening by path alone (e.g.
         # scripts/run_mirror.py) can never mis-resolve a set table as rows
@@ -547,15 +550,14 @@ class LakeTable:
             return True
         return int(epoch_id) <= int(snap.get("epoch_floor", -1))
 
-    def _check_epoch(self, epoch_id: int) -> bool:
-        """True = already applied, skip. Raises on an id below the eviction
-        floor but absent from the window: indistinguishable from a stream
-        whose checkpoint was reset against this lake, where both possible
-        silent behaviors are wrong (re-apply = double-merge; skip = data
-        loss). The operator resolves it explicitly: resume from the old
-        checkpoint, or call ``reset_epoch_log()`` before re-pointing a
-        fresh stream."""
-        snap = self.current_snapshot()
+    def _check_epoch(self, epoch_id: int, snap: dict | None) -> bool:
+        """True = already applied in ``snap``, skip. Raises on an id below
+        the eviction floor but absent from the window: indistinguishable
+        from a stream whose checkpoint was reset against this lake, where
+        both possible silent behaviors are wrong (re-apply = double-merge;
+        skip = data loss). The operator resolves it explicitly: resume from
+        the old checkpoint, or call ``reset_epoch_log()`` before re-pointing
+        a fresh stream."""
         if snap is None:
             return False
         if str(epoch_id) in snap["epochs"]:
@@ -581,25 +583,39 @@ class LakeTable:
         only safe when the old stream is truly gone. Published as a NEW
         snapshot (data untouched, manifests carried by reference) so
         historical ``snap-*.json`` stay immutable."""
-        last_err = None
-        for _ in range(5):
-            snap = self.current_snapshot()
+
+        def plan(snap):
             if snap is None:
                 return
-            new_snap = dict(snap)
-            new_snap["parent"] = snap["snapshot_id"]
-            new_snap["snapshot_id"] = snap["snapshot_id"] + 1
-            new_snap["epochs"] = {}
-            new_snap.pop("epoch_floor", None)
-            new_snap["meta"] = dict(snap.get("meta") or {}, epoch_log_reset=True)
-            new_snap["kind"] = "meta"
-            new_snap.pop("added", None)
+            new_snap = dict(
+                snap,
+                snapshot_id=snap["snapshot_id"] + 1,
+                parent=snap["snapshot_id"],
+                epochs={},
+                meta=dict(snap.get("meta") or {}, epoch_log_reset=True),
+                kind="meta",
+            )
+            for k in ("epoch_floor", "added", "resolved"):
+                new_snap.pop(k, None)
+            self._publish(new_snap)
+
+        self._replan(plan)
+
+    def _replan(self, plan):
+        """The one write protocol (Iceberg's optimistic commit): run
+        ``plan(snap)`` on ONE read of the current snapshot. The planner
+        derives everything it writes from that dict and publishes it as
+        that snapshot's successor (``_commit`` → ``_publish``). When a
+        concurrent writer published first, the CAS raises
+        :class:`CommitConflictError` and the whole planner re-runs against
+        the fresh snapshot — a plan is never rebased onto a snapshot it did
+        not read. The conflict propagates after ``_COMMIT_ATTEMPTS`` tries."""
+        for attempt in range(_COMMIT_ATTEMPTS):
             try:
-                self._publish(new_snap)
-                return
-            except CommitConflictError as e:
-                last_err = e  # metadata-only: rebuild on fresh state
-        raise last_err
+                return plan(self.current_snapshot())
+            except CommitConflictError:
+                if attempt == _COMMIT_ATTEMPTS - 1:
+                    raise
 
     def _publish(self, snapshot: dict) -> None:
         """Publish a snapshot under OPTIMISTIC CONCURRENCY (round 6 —
@@ -607,8 +623,9 @@ class LakeTable:
         multiple concurrent writer PROCESSES (e.g. the streaming driver
         racing a maintenance job's compact/vacuum); a commit built against
         a snapshot that is no longer current is REJECTED with
-        :class:`CommitConflictError` and the caller retries against fresh
-        state — no interleaving can drop another writer's commit.
+        :class:`CommitConflictError` and ``_replan`` re-plans the whole
+        operation against fresh state — no interleaving can drop another
+        writer's commit.
 
         Protocol, serialized by an advisory ``flock`` on
         ``_meta/commit.lock`` (kernel-released if the holder dies):
@@ -731,8 +748,6 @@ class LakeTable:
         so a set redelivered in a later epoch (cross-epoch duplicate outside
         the epoch log's window) supersedes its first copy instead of
         surviving twice."""
-        if self.mode == "replace":
-            return df
         if not {"op", "warc_ts", "pos"}.issubset(set(df.columns)):
             # no LWW order columns → the table is maintained by replace_keys
             # only, whose file-scoped rewrite keeps every key's rows in
@@ -1921,8 +1936,8 @@ class LakeTable:
     def _schema_of(self, df: DataFrame) -> list[tuple[str, str]]:
         return [(f.name, f.dataType.simpleString()) for f in df.schema.fields if f.name != "_bucket"]
 
-    def _merged_schema(self, df: DataFrame) -> list[tuple[str, str]]:
-        cols = self.schema_columns()
+    def _merged_schema(self, snap: dict | None, df: DataFrame) -> list[tuple[str, str]]:
+        cols = [tuple(c) for c in snap["schema"]] if snap else []
         names = {n for n, _ in cols}
         for n, t in self._schema_of(df):
             if n not in names:
@@ -2048,179 +2063,130 @@ class LakeTable:
 
     def _commit(
         self,
-        spark: SparkSession,
+        snap: dict | None,
         new_rows: DataFrame,
+        schema: list[tuple[str, str]],
         epoch_id: int | None,
         *,
-        append: bool,
+        kind: str,
         touched_buckets: list[int] | None = None,
-        resolved: bool,
-        full_replace: bool = False,
-        extra_meta: dict | None = None,
         keep_files: dict[str, list[dict]] | None = None,
+        extra_meta: dict | None = None,
         truncate: list | None = None,
         evolved_types: dict[str, str] | None = None,
-        kind: str = "append",
     ) -> dict:
-        """Publish a snapshot. Manifest references of untouched buckets are
+        """Write ``new_rows`` (carrying ``_bucket``) and publish them as the
+        successor of ``snap`` — the one snapshot the caller planned against
+        (see :meth:`_replan`): the new id is ``snap``'s plus one, and the
+        manifest refs, epoch window, truncate horizon and evolved types all
+        fold from ``snap``. Manifest references of untouched buckets are
         carried over by name (no rewrite); only changed buckets get a new
         manifest — snapshot metadata cost is O(touched buckets) per commit.
 
         ``kind`` ('append' | 'compact' | 'replace') is recorded in the
-        snapshot; append commits additionally record an ``added`` manifest
-        of exactly the file entries this commit introduced — the unit the
-        snapshot-window change feed (:meth:`read_changes`) consumes.
+        snapshot. An append adds the written files to their buckets' stacks
+        and records an ``added`` manifest of exactly those entries — the
+        unit the snapshot-window change feed (:meth:`read_changes`)
+        consumes. A rewrite ('compact' | 'replace') sets each of
+        ``touched_buckets`` to its ``keep_files`` entries plus the written
+        ones; ``touched_buckets=None`` rewrites every bucket of ``snap``
+        and of the write with nothing kept (full compaction / rebucketing).
 
-        ``keep_files``: for file-scoped rewrites (replace_keys) — the
-        entries of the touched buckets that survive unchanged alongside the
-        newly written files.
-
-        Concurrent writers (VERDICT r5 item 3): the publish is an
-        optimistic-concurrency CAS (see ``_publish``). APPEND commits that
-        lose the race are rebuilt here against the fresh snapshot and
-        retried — an append's data files are new by construction, so the
-        only state to recompute is metadata (manifest refs, epoch window,
-        horizon folds), and a concurrently-committed identical epoch turns
-        the retry into the normal already-applied no-op. NON-append commits
-        (compact/replace) stage data derived from the snapshot they read —
-        retrying them here with stale inputs could drop a concurrent
-        append's rows — so the conflict propagates as
-        :class:`CommitConflictError` and the OPERATION re-plans (compact
-        and replace_keys re-run their whole body against fresh state)."""
-        last_err: CommitConflictError | None = None
-        for _attempt in range(5):
-            snap = self.current_snapshot()
-            parent = snap["snapshot_id"] if snap else 0
-            sid = parent + 1
-            if (
-                epoch_id is not None
-                and snap is not None
-                and str(epoch_id) in snap["epochs"]
-            ):
-                return None  # a concurrent writer already applied this epoch
-            if append:
-                # the append-onto-empty-table resolution shortcut must be
-                # re-derived per attempt — a concurrent commit may have
-                # populated the table since the caller computed it
-                resolved = not (snap is not None and any(snap["buckets"].values()))
-                if snap is not None:
-                    # a concurrent writer may have evolved columns since the
-                    # caller computed its merged schema — union them in, or
-                    # this snapshot's schema list would hide them from every
-                    # reader (our data files simply null-fill them)
-                    have = {n for n, _ in self._current_write_schema}
-                    extra = [
-                        (n, t) for n, t in snap["schema"] if n not in have
-                    ]
-                    if extra:
-                        self._current_write_schema = (
-                            list(self._current_write_schema) + extra
-                        )
-            tag = uuid.uuid4().hex[:8]
-            written = self._write_buckets(new_rows, sid, tag)
-            refs: dict[str, str | list] = dict(snap["buckets"]) if snap else {}
-            if full_replace:
-                # whole-table rewrite (full compaction / rebucketing): only
-                # the files just written are live
-                refs = {b: self._write_manifest(es) for b, es in written.items() if es}
-            elif append:
-                for b, es in written.items():
-                    if not es:
-                        continue
-                    prev = (
-                        self._entries_of_ref(refs[b]) if b in refs else []
-                    )
-                    refs[b] = self._write_manifest(prev + es)
-                if not any(written.values()) and snap is not None:
-                    # an empty append (e.g. a chunks epoch where every key
-                    # was skipped) changes no data — keep the resolution
-                    # state
-                    resolved = snap.get("resolved", True)
-            else:
-                for b in touched_buckets or []:
-                    entries = list((keep_files or {}).get(str(b), [])) + written.get(str(b), [])
-                    if entries:
-                        refs[str(b)] = self._write_manifest(entries)
-                    else:
-                        refs.pop(str(b), None)
-            epochs = dict(snap["epochs"]) if snap else {}
-            epoch_floor = int(snap.get("epoch_floor", -1)) if snap else -1
-            if epoch_id is not None:
-                epochs[str(epoch_id)] = sid
-            # bound the idempotency log: Spark re-delivers only recent epochs
-            # after a restart (checkpointed offsets are monotonic), so a
-            # sliding window of the newest entries suffices — keeps snapshot
-            # JSON O(1) over a 10^10-event run instead of O(epochs). Evicted
-            # ids raise the monotone ``epoch_floor``: a replay OLDER than the
-            # window is then still recognized as already-applied
-            # (epoch_committed) instead of silently re-applied after its
-            # window entry is gone.
-            if len(epochs) > self.epoch_window:
-                keep = sorted(epochs, key=int)[-self.epoch_window:]
-                kept = set(keep)
-                epoch_floor = max(
-                    [epoch_floor] + [int(k) for k in epochs if k not in kept]
-                )
-                epochs = {k: epochs[k] for k in keep}
-            # the truncate horizon is monotone and persists across
-            # compaction: a late event older than the horizon must still die
-            # at read time
-            prev_tr = snap.get("truncate") if snap else None
-            horizon = max(
-                (list(t) for t in (prev_tr, truncate) if t is not None), default=None
+        If another writer published after ``snap``, ``_publish`` raises
+        :class:`CommitConflictError`: this attempt's staged files are
+        removed and the error propagates to ``_replan``, which re-runs the
+        whole operation against the fresh snapshot."""
+        parent = snap["snapshot_id"] if snap else 0
+        sid = parent + 1
+        tag = uuid.uuid4().hex[:8]
+        written = self._write_buckets(new_rows, sid, tag)
+        refs: dict[str, str | list] = dict(snap["buckets"]) if snap else {}
+        if kind == "append":
+            for b, es in written.items():
+                prev = self._entries_of_ref(refs[b]) if b in refs else []
+                refs[b] = self._write_manifest(prev + es)
+        else:
+            if touched_buckets is None:
+                touched_buckets = sorted(set(refs) | set(written), key=int)
+            for b in map(str, touched_buckets):
+                entries = list((keep_files or {}).get(b, [])) + written.get(b, [])
+                if entries:
+                    refs[b] = self._write_manifest(entries)
+                else:
+                    refs.pop(b, None)
+        epochs = dict(snap["epochs"]) if snap else {}
+        epoch_floor = int(snap.get("epoch_floor", -1)) if snap else -1
+        if epoch_id is not None:
+            epochs[str(epoch_id)] = sid
+        # bound the idempotency log: Spark re-delivers only recent epochs
+        # after a restart (checkpointed offsets are monotonic), so a
+        # sliding window of the newest entries suffices — keeps snapshot
+        # JSON O(1) over a 10^10-event run instead of O(epochs). Evicted
+        # ids raise the monotone ``epoch_floor``: a replay OLDER than the
+        # window is then still recognized as already-applied
+        # (epoch_committed) instead of silently re-applied after its
+        # window entry is gone.
+        if len(epochs) > self.epoch_window:
+            keep = sorted(epochs, key=int)[-self.epoch_window:]
+            kept = set(keep)
+            epoch_floor = max(
+                [epoch_floor] + [int(k) for k in epochs if k not in kept]
             )
-            # evolved-column LOGICAL types: monotone widen-only fold of
-            # per-batch votes (operators.evolution.widen_type); the physical
-            # column stays string, so a widen is pure metadata — carried
-            # forward by every commit (compaction/replace included), like
-            # the truncate horizon
-            etypes = dict(snap.get("evolved_types") or {}) if snap else {}
-            for c, t in (evolved_types or {}).items():
-                etypes[c] = widen_type(etypes.get(c), t)
-            new_snap = {
-                "snapshot_id": sid,
-                "parent": parent,
-                "schema": [list(c) for c in self._current_write_schema],
-                "n_buckets": self.n_buckets,
-                "mode": self.mode,
-                "buckets": refs,
-                "epochs": epochs,
-                "resolved": resolved,
-                "meta": extra_meta or {},
-                "kind": kind,
-            }
-            if kind == "append":
-                added = [dict(e, b=b) for b, es in written.items() for e in es]
-                if added:
-                    new_snap["added"] = self._write_manifest(added)
-            if epoch_floor >= 0:
-                new_snap["epoch_floor"] = epoch_floor
-            if horizon is not None:
-                new_snap["truncate"] = horizon
-            if etypes:
-                new_snap["evolved_types"] = etypes
-            try:
-                self._publish(new_snap)
-            except CommitConflictError as e:
-                # this attempt's staged files are unreferenced — reclaim
-                # them now rather than waiting for vacuum
-                shutil.rmtree(
-                    os.path.join(self.data_dir, f"commit-{sid:012d}-{tag}"),
-                    ignore_errors=True,
-                )
-                if not append:
-                    raise  # compact/replace must re-plan on fresh state
-                last_err = e
-                continue
-            # evict superseded manifests from the in-memory cache: over 10^5
-            # epochs every commit adds O(touched buckets) entries and the
-            # superseded ones would otherwise accumulate into a driver leak
-            live_refs = {r for r in refs.values() if isinstance(r, str)}
-            self._manifest_cache = {
-                k: v for k, v in self._manifest_cache.items() if k in live_refs
-            }
-            return new_snap
-        raise last_err
+            epochs = {k: epochs[k] for k in keep}
+        # the truncate horizon is monotone and persists across
+        # compaction: a late event older than the horizon must still die
+        # at read time
+        prev_tr = snap.get("truncate") if snap else None
+        horizon = max(
+            (list(t) for t in (prev_tr, truncate) if t is not None), default=None
+        )
+        # evolved-column LOGICAL types: monotone widen-only fold of
+        # per-batch votes (operators.evolution.widen_type); the physical
+        # column stays string, so a widen is pure metadata — carried
+        # forward by every commit (compaction/replace included), like
+        # the truncate horizon
+        etypes = dict(snap.get("evolved_types") or {}) if snap else {}
+        for c, t in (evolved_types or {}).items():
+            etypes[c] = widen_type(etypes.get(c), t)
+        new_snap = {
+            "snapshot_id": sid,
+            "parent": parent,
+            "schema": [list(c) for c in schema],
+            "n_buckets": self.n_buckets,
+            "mode": self.mode,
+            "buckets": refs,
+            "epochs": epochs,
+            "meta": extra_meta or {},
+            "kind": kind,
+        }
+        if kind == "append":
+            added = [dict(e, b=b) for b, es in written.items() for e in es]
+            if added:
+                new_snap["added"] = self._write_manifest(added)
+        if epoch_floor >= 0:
+            new_snap["epoch_floor"] = epoch_floor
+        if horizon is not None:
+            new_snap["truncate"] = horizon
+        if etypes:
+            new_snap["evolved_types"] = etypes
+        try:
+            self._publish(new_snap)
+        except CommitConflictError:
+            # this attempt's staged files are unreferenced — reclaim them
+            # now rather than waiting for vacuum
+            shutil.rmtree(
+                os.path.join(self.data_dir, f"commit-{sid:012d}-{tag}"),
+                ignore_errors=True,
+            )
+            raise
+        # evict superseded manifests from the in-memory cache: over 10^5
+        # epochs every commit adds O(touched buckets) entries and the
+        # superseded ones would otherwise accumulate into a driver leak
+        live_refs = {r for r in refs.values() if isinstance(r, str)}
+        self._manifest_cache = {
+            k: v for k, v in self._manifest_cache.items() if k in live_refs
+        }
+        return new_snap
 
     def _entries_of_ref(self, ref) -> list[dict]:
         if isinstance(ref, list):  # legacy inline
@@ -2228,7 +2194,7 @@ class LakeTable:
         return list(self._load_manifest(ref))
 
     def probe_batch(
-        self, deltas: DataFrame, has_extra: bool = True
+        self, deltas: DataFrame
     ) -> tuple[list[int], list[str], dict[int, int]]:
         """One job returning (touched buckets, observed evolved-column keys,
         per-bucket row counts) — fuses the schema-evolution probe and the
@@ -2236,7 +2202,7 @@ class LakeTable:
         round-trip per epoch. The counts feed :func:`build_key_probe`'s
         is-pruning-even-possible gate."""
         aggs = [F.count("*").alias("_n")]
-        if has_extra and "extra" in deltas.columns:
+        if "extra" in deltas.columns:
             aggs.append(
                 F.array_distinct(
                     F.flatten(
@@ -2259,7 +2225,6 @@ class LakeTable:
 
     def _append_commit(
         self,
-        spark: SparkSession,
         rows: DataFrame,
         epoch_id: int | None,
         pre_reduced: bool,
@@ -2267,8 +2232,6 @@ class LakeTable:
         evolved_types: dict[str, str] | None = None,
         extra_meta: dict | None = None,
     ) -> dict | None:
-        if epoch_id is not None and self._check_epoch(epoch_id):
-            return None  # exactly-once: this micro-batch already applied
         if self.bucket_source == "column":
             # a moved key legitimately writes TWO rows (tombstone in the old
             # bucket + insert in the new) — reducing them here would drop the
@@ -2280,24 +2243,26 @@ class LakeTable:
             # file resolution fast path rests on (O(batch) map-side-combined
             # aggregation — cheap relative to the write itself)
             rows = self._resolve(rows)
-        merged_schema = self._merged_schema(rows)
-        self._current_write_schema = merged_schema
-        aligned = _align_to(rows, merged_schema).withColumn(
-            "_bucket", self._bucket_expr()
-        )
-        snap = self.current_snapshot()
-        had_files = bool(snap) and any(snap["buckets"].values())
-        # an append onto an empty table is already resolved (≤1 set per key)
-        return self._commit(
-            spark,
-            aligned,
-            epoch_id,
-            append=True,
-            resolved=not had_files,
-            truncate=truncate,
-            evolved_types=evolved_types,
-            extra_meta=extra_meta,
-        )
+
+        def plan(snap):
+            if epoch_id is not None and self._check_epoch(epoch_id, snap):
+                return None  # exactly-once: this micro-batch already applied
+            # folded from the planned snapshot: a re-plan picks up columns a
+            # concurrent writer evolved, and this snapshot keeps them
+            schema = self._merged_schema(snap, rows)
+            aligned = _align_to(rows, schema).withColumn("_bucket", self._bucket_expr())
+            return self._commit(
+                snap,
+                aligned,
+                schema,
+                epoch_id,
+                kind="append",
+                truncate=truncate,
+                evolved_types=evolved_types,
+                extra_meta=extra_meta,
+            )
+
+        return self._replan(plan)
 
     def merge_lww(
         self,
@@ -2343,7 +2308,6 @@ class LakeTable:
         log make it idempotent.
         """
         return self._append_commit(
-            spark,
             deltas,
             epoch_id,
             pre_reduced=pre_reduced,
@@ -2372,34 +2336,10 @@ class LakeTable:
         (auto_gen_rag.py:174-191): append-only per epoch, no table reads.
         """
         return self._append_commit(
-            spark, rows, epoch_id, pre_reduced=pre_reduced, truncate=truncate
+            rows, epoch_id, pre_reduced=pre_reduced, truncate=truncate
         )
 
     def replace_keys(
-        self,
-        spark: SparkSession,
-        rows: DataFrame,
-        keys: DataFrame,
-        epoch_id: int | None = None,
-        *,
-        truncate: list | None = None,
-        extra_meta: dict | None = None,
-    ) -> dict | None:
-        """Concurrency wrapper around :meth:`_replace_keys_once`: a rewrite
-        that loses the snapshot race re-plans against the fresh snapshot
-        (its file scope may have grown) — see :meth:`compact`."""
-        last_err = None
-        for _ in range(5):
-            try:
-                return self._replace_keys_once(
-                    spark, rows, keys, epoch_id, truncate=truncate,
-                    extra_meta=extra_meta,
-                )
-            except CommitConflictError as e:
-                last_err = e
-        raise last_err
-
-    def _replace_keys_once(
         self,
         spark: SparkSession,
         rows: DataFrame,
@@ -2417,79 +2357,67 @@ class LakeTable:
         delta files survive by manifest reference. Copy-on-write by design —
         use ``merge_sets`` on hot streaming paths."""
         assert self.bucket_source == "key_hash", "replace_keys needs key-derived buckets"
-        if epoch_id is not None and self._check_epoch(epoch_id):
-            return None
-
-        merged_schema = self._merged_schema(rows)
-        self._current_write_schema = merged_schema
-
         keys_b = keys.select(F.col(self.key)).distinct().withColumn(
             "_bucket", _bucket_col(self.key, self.n_buckets)
         )
-        # one O(n_buckets) job for (touched buckets, key count); the key
-        # VALUES are only brought to the driver when the set is small enough
-        # to bloom-test there — past the cap the rewrite falls back to
-        # whole-bucket scope instead of collecting millions of strings
-        per_bucket = keys_b.groupBy("_bucket").count().collect()
-        touched = sorted(r["_bucket"] for r in per_bucket)
-        n_keys = sum(r["count"] for r in per_bucket)
-        probe_hashes = None
-        if 0 < n_keys <= 100_000:
-            key_list = [r[self.key] for r in keys_b.select(self.key).collect()]
-            probe_hashes = [_bloom_hashes(k) for k in key_list]
 
-        snap = self.current_snapshot()
-        rewrite: dict[str, list[dict]] = {}
-        keep: dict[str, list[dict]] = {}
-        if snap:
-            all_entries = self._entries(snap)
-            for b in touched:
-                es = all_entries.get(str(b), [])
-                hit = self._prune_entries(es, probe_hashes)
-                hit_paths = {e["p"] for e in hit}
-                rewrite[str(b)] = hit
-                keep[str(b)] = [e for e in es if e["p"] not in hit_paths]
+        def plan(snap):
+            if epoch_id is not None and self._check_epoch(epoch_id, snap):
+                return None
+            schema = self._merged_schema(snap, rows)
+            # one O(n_buckets) job for (touched buckets, key count); the key
+            # VALUES are only brought to the driver when the set is small
+            # enough to bloom-test there — past the cap the rewrite falls
+            # back to whole-bucket scope instead of collecting millions of
+            # strings
+            per_bucket = keys_b.groupBy("_bucket").count().collect()
+            touched = sorted(r["_bucket"] for r in per_bucket)
+            n_keys = sum(r["count"] for r in per_bucket)
+            probe_hashes = None
+            if 0 < n_keys <= 100_000:
+                key_list = [r[self.key] for r in keys_b.select(self.key).collect()]
+                probe_hashes = [_bloom_hashes(k) for k in key_list]
+            rewrite: dict[str, list[dict]] = {}
+            keep: dict[str, list[dict]] = {}
+            if snap:
+                all_entries = self._entries(snap)
+                for b in touched:
+                    es = all_entries.get(str(b), [])
+                    hit = self._prune_entries(es, probe_hashes)
+                    hit_paths = {e["p"] for e in hit}
+                    rewrite[str(b)] = hit
+                    keep[str(b)] = [e for e in es if e["p"] not in hit_paths]
+            out = _align_to(rows, schema)
+            if any(rewrite.values()):
+                existing = _align_to(self._read_resolved(spark, snap, rewrite), schema)
+                survivors = existing.join(
+                    keys_b.select(self.key), on=self.key, how="left_anti"
+                )
+                out = survivors.unionByName(out)
+            out = out.withColumn("_bucket", _bucket_col(self.key, self.n_buckets))
+            # equality-delete sidecar (round 6): the keys this rewrite
+            # touched — the delete set ∪ the inserted rows' keys (a key in
+            # `keys` but not in `rows` VANISHES without leaving any row, so
+            # only this record makes the commit representable as a change
+            # feed; the Iceberg v2 equality-delete-file twin). O(touched
+            # keys), written distributed.
+            sidecar_rel = os.path.join("_meta", "replaced", f"rk-{uuid.uuid4().hex}")
+            keys_b.select(self.key).union(rows.select(self.key)).distinct().write.mode(
+                "overwrite"
+            ).parquet(os.path.join(self.path, sidecar_rel))
+            return self._commit(
+                snap,
+                out,
+                schema,
+                epoch_id,
+                kind="replace",
+                touched_buckets=touched,
+                keep_files=keep,
+                truncate=truncate,
+                extra_meta=dict(extra_meta or {}, replaced_keys=sidecar_rel),
+            )
 
-        aligned_new = _align_to(rows, merged_schema)
-        existing = None
-        if any(rewrite.values()):
-            existing = self._read_resolved(spark, snap, rewrite)
-        if existing is not None:
-            existing = _align_to(existing, merged_schema)
-            survivors = existing.join(keys_b.select(self.key), on=self.key, how="left_anti")
-            out = survivors.unionByName(aligned_new)
-        else:
-            out = aligned_new
-        out = out.withColumn("_bucket", _bucket_col(self.key, self.n_buckets))
-        # untouched buckets keep whatever resolution state they had; within
-        # touched buckets the kept (non-matching) files may still stack, so
-        # the pre-existing resolution state carries over too
-        resolved = snap.get("resolved", True) if snap else True
-        if any(keep.values()):
-            resolved = False
-        # equality-delete sidecar (round 6): the keys this rewrite touched —
-        # the delete set ∪ the inserted rows' keys (a key in `keys` but not
-        # in `rows` VANISHES without leaving any row, so only this record
-        # makes the commit representable as a change feed; the Iceberg v2
-        # equality-delete-file twin). O(touched keys), written distributed.
-        sidecar_rel = os.path.join(
-            "_meta", "replaced", f"rk-{uuid.uuid4().hex}"
-        )
-        keys_b.select(self.key).union(rows.select(self.key)).distinct().write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.path, sidecar_rel))
-        return self._commit(
-            spark,
-            out,
-            epoch_id,
-            append=False,
-            touched_buckets=touched,
-            resolved=resolved,
-            keep_files=keep,
-            truncate=truncate,
-            extra_meta=dict(extra_meta or {}, replaced_keys=sidecar_rel),
-            kind="replace",
-        )
+        return self._replan(plan)
 
     # -- maintenance ----------------------------------------------------------
 
@@ -2510,32 +2438,6 @@ class LakeTable:
         min_files: int | None = None,
         n_buckets: int | None = None,
     ) -> dict | None:
-        """Concurrency wrapper around :meth:`_compact_once`: a compaction
-        that loses the snapshot race to a concurrent append re-PLANS from
-        the fresh snapshot (re-reading the now-larger delta stacks) rather
-        than blindly re-publishing — a blind retry would drop the rows the
-        concurrent commit appended (the Iceberg rewrite-validation model)."""
-        last_err = None
-        for _ in range(5):
-            try:
-                return self._compact_once(
-                    spark,
-                    drop_tombstones_before=drop_tombstones_before,
-                    min_files=min_files,
-                    n_buckets=n_buckets,
-                )
-            except CommitConflictError as e:
-                last_err = e
-        raise last_err
-
-    def _compact_once(
-        self,
-        spark: SparkSession,
-        *,
-        drop_tombstones_before=None,
-        min_files: int | None = None,
-        n_buckets: int | None = None,
-    ) -> dict | None:
         """Fold merge-on-read delta files into one resolved file per bucket
         and optionally age out LWW tombstones older than
         ``drop_tombstones_before`` (a warc_ts horizon).
@@ -2543,10 +2445,10 @@ class LakeTable:
         Long-running CDC accumulates one delta file per touched bucket per
         epoch plus delete tombstones; compaction restores read efficiency
         (this is where the merge work deferred by merge-on-read is paid,
-        amortized over ``compact_every`` epochs). Tombstones may only be
-        dropped once no event older than the horizon can still arrive (i.e.
-        behind the stream's watermark) — dropping a younger tombstone would
-        let a late replay resurrect the key.
+        amortized over the epochs between compactions). Tombstones may only
+        be dropped once no event older than the horizon can still arrive
+        (i.e. behind the stream's watermark) — dropping a younger tombstone
+        would let a late replay resurrect the key.
 
         ``min_files``: incremental mode — rewrite only buckets holding ≥ that
         many files (under key-localized feeds cold buckets stay untouched, so
@@ -2558,65 +2460,50 @@ class LakeTable:
         ``n_buckets``: rebucket the table during the full pass — the ONLY
         legal way to change the key→bucket mapping (snapshots persist the
         bucket count; the constructor adopts it).
+
+        A compaction that loses the publish race to a concurrent append
+        re-plans from the fresh snapshot (see :meth:`_replan`), re-reading
+        the now-larger delta stacks — the Iceberg rewrite-validation model.
         """
-        snap = self.current_snapshot()
-        if snap is None:
-            return None
         if drop_tombstones_before is not None or n_buckets is not None:
             min_files = None
-        if min_files is not None:
+
+        def plan(snap):
+            if snap is None:
+                return None
             entries = self._entries(snap)
-            touched = [int(b) for b, es in entries.items() if len(es) >= min_files]
-            if not touched:
-                return None
-            sub = {str(b): entries[str(b)] for b in touched}
-            df = self._read_resolved(spark, snap, sub)
+            touched = None  # full pass: every bucket, nothing kept
+            meta = {"compaction": True}
+            if min_files is not None:
+                entries = {b: es for b, es in entries.items() if len(es) >= min_files}
+                if not entries:
+                    return None
+                touched = [int(b) for b in entries]
+                meta["partial"] = True
+            df = self._read_resolved(spark, snap, entries)
             if df is None:
-                return None
-            self._current_write_schema = self.schema_columns()
-            out = df.withColumn("_bucket", self._bucket_expr())
-            new_snap = self._commit(
-                spark,
-                out,
-                epoch_id=None,
-                append=False,
-                touched_buckets=touched,
-                # untouched buckets may still hold unresolved deltas; the
-                # table is fully resolved only when every bucket is ≤1 file
-                resolved=all(
-                    len(es) <= 1
-                    for b, es in entries.items()
-                    if int(b) not in set(touched)
-                ),
-                extra_meta={"compaction": True, "partial": True},
+                return None  # snapshot references zero live files — nothing to fold
+            if drop_tombstones_before is not None and "is_deleted" in df.columns:
+                df = df.where(
+                    (F.col("is_deleted").isNull())
+                    | (F.col("is_deleted") == 0)
+                    | (F.col("warc_ts") >= F.lit(drop_tombstones_before))
+                )
+            if n_buckets is not None:
+                self.n_buckets = n_buckets
+            return self._commit(
+                snap,
+                df.withColumn("_bucket", self._bucket_expr()),
+                [tuple(c) for c in snap["schema"]],
+                None,
                 kind="compact",
+                touched_buckets=touched,
+                extra_meta=meta,
             )
+
+        new_snap = self._replan(plan)
+        if new_snap is not None:
             self.vacuum()
-            return new_snap
-        df = self.read_raw(spark)  # resolved
-        if df is None:
-            return None  # snapshot references zero live files — nothing to fold
-        if drop_tombstones_before is not None and "is_deleted" in df.columns:
-            df = df.where(
-                (F.col("is_deleted").isNull())
-                | (F.col("is_deleted") == 0)
-                | (F.col("warc_ts") >= F.lit(drop_tombstones_before))
-            )
-        if n_buckets is not None:
-            self.n_buckets = n_buckets
-        self._current_write_schema = self.schema_columns()
-        out = df.withColumn("_bucket", self._bucket_expr())
-        new_snap = self._commit(
-            spark,
-            out,
-            epoch_id=None,
-            append=False,
-            full_replace=True,
-            resolved=True,
-            extra_meta={"compaction": True},
-            kind="compact",
-        )
-        self.vacuum()
         return new_snap
 
     def expire_snapshots(self, keep_last: int = 10) -> int:

@@ -312,9 +312,10 @@ class CdcPipeline:
                 wall_ms=wall_ms,
                 rows_corrupt=n_corrupt,
             )
-            # periodic maintenance: fold merge-on-read deltas / aged
-            # tombstones (tombstone horizon = the watermark — older events
-            # can no longer arrive, so their tombstones are safe to drop)
+            # periodic maintenance: fold merge-on-read deltas to one file
+            # per bucket — a full pass every `compact_every` epochs, else
+            # only the buckets holding ≥ `compact_min_files` files. No
+            # tombstone horizon is passed, so delete tombstones are kept
             if self.compact_every and (epoch_id + 1) % self.compact_every == 0:
                 self.pages.compact(spark)
                 if self.with_chunks:
@@ -422,7 +423,9 @@ class CdcPipeline:
         # for sub-floor-but-not-in-window ids instead (resolve with the
         # pipeline-level reset_epoch_logs(), which resets every table).
         # epoch_id=None (unlogged dead-letter replay) has no log entry.
-        if epoch_id is not None and self.chunks._check_epoch(epoch_id):
+        if epoch_id is not None and self.chunks._check_epoch(
+            epoch_id, self.chunks.current_snapshot()
+        ):
             return  # replayed chunks epoch: skip plan construction entirely
 
         b_key = order_key_cols(F.col("op"), F.col("warc_ts"), F.col("pos"))

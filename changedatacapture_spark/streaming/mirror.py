@@ -30,8 +30,8 @@ LWW merge:
   kills the same rows the source did, without ever seeing them as feed rows.
 - :class:`~..sinks.lake.ChangeFeedUnavailableError` (window vacuumed,
   replace_keys/rebucket inside it, retention exceeded) triggers
-  :meth:`resync`: wipe the mirror and rebuild from a pinned-snapshot
-  ``read()`` — the reference's "full re-sync" escape hatch.
+  :meth:`resync`: rebuild the mirror beside itself from a pinned-snapshot
+  ``read()`` and swap it in — the reference's "full re-sync" escape hatch.
 
 Idempotent + restartable: every apply records the consumed source snapshot id
 in the mirror snapshot's ``meta`` (``feed_cursor``) ON THE SAME COMMIT as the
@@ -73,6 +73,26 @@ def _next_epoch(table: LakeTable) -> int:
     return max(eps + [floor]) + 1
 
 
+def _rebuild_swapped(path: str, build) -> None:
+    """Rebuild the directory at ``path`` without ever exposing a partial
+    one (ADVICE r6): ``build(tmp)`` writes the replacement into a SIBLING
+    directory, which is then swapped into place with two renames. Readers
+    keep reading the old files throughout (POSIX unlinked-inode
+    semantics); a build that fails or a process that dies mid-build leaves
+    the old directory fully intact, and its leftover ``.resync-*``
+    directories are reclaimed by the next rebuild. The only non-atomic
+    window left is the instant between the two renames."""
+    tmp = path + ".resync-tmp"
+    old = path + ".resync-old"
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    build(tmp)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 class FeedMirror:
     def __init__(
         self,
@@ -90,13 +110,29 @@ class FeedMirror:
         self.member_key = member_key
         self.path = os.path.abspath(path)
         self.n_buckets = n_buckets or source.n_buckets
-        self._open_table()
+        self.table = self._open_table(self.path)
 
-    def _open_table(self) -> None:
+    def _open_table(self, path: str) -> LakeTable:
         key = self.source.key if self.member_key is None else "_member_id"
-        self.table = LakeTable(
-            self.path, key=key, n_buckets=self.n_buckets, mode="row"
+        return LakeTable(path, key=key, n_buckets=self.n_buckets, mode="row")
+
+    def _with_member_id(self, rows: DataFrame) -> DataFrame:
+        if self.member_key is None:
+            return rows
+        return rows.withColumn(
+            "_member_id",
+            F.concat_ws(
+                _MEMBER_SEP,
+                F.col(self.source.key),
+                F.col(self.member_key).cast("string"),
+            ),
         )
+
+    def _no_rows(self, spark: SparkSession) -> DataFrame:
+        """An empty batch: commits that only advance the durable cursor."""
+        return spark.createDataFrame(
+            [], "op string, warc_ts timestamp, pos long"
+        ).withColumn(self.table.key, F.lit(None).cast("string"))
 
     @property
     def cursor(self) -> int:
@@ -132,19 +168,11 @@ class FeedMirror:
         return "applied"
 
     def _feed_rows(self, feed: DataFrame) -> DataFrame:
-        rows = feed.withColumn(
-            "is_deleted", (F.col("_change_type") == "delete").cast("int")
-        ).drop("_change_type", "_commit_sid")
-        if self.member_key is not None:
-            rows = rows.withColumn(
-                "_member_id",
-                F.concat_ws(
-                    _MEMBER_SEP,
-                    F.col(self.source.key),
-                    F.col(self.member_key).cast("string"),
-                ),
-            )
-        return rows
+        return self._with_member_id(
+            feed.withColumn(
+                "is_deleted", (F.col("_change_type") == "delete").cast("int")
+            ).drop("_change_type", "_commit_sid")
+        )
 
     def _apply(
         self,
@@ -157,12 +185,9 @@ class FeedMirror:
         if feed is None:
             # commits in the window but zero net changes (or pure metadata)
             # — advance the durable cursor with an empty append
-            empty = spark.createDataFrame(
-                [], "op string, warc_ts timestamp, pos long"
-            ).withColumn(self.table.key, F.lit(None).cast("string"))
             self.table.merge_lww(
                 spark,
-                empty,
+                self._no_rows(spark),
                 epoch_id=_next_epoch(self.table),
                 pre_reduced=True,
                 truncate=horizon,
@@ -191,38 +216,34 @@ class FeedMirror:
         )
 
     def resync(self, spark: SparkSession) -> None:
-        """Full rebuild: wipe the mirror and copy the source's live set as of
-        a PINNED snapshot (so a concurrent source commit cannot tear the
-        copy), then set the cursor to that snapshot."""
+        """Full rebuild: copy the source's live set as of a PINNED snapshot
+        (so a concurrent source commit cannot tear the copy) into a new
+        table whose one commit also sets the cursor to that snapshot, then
+        swap it in for the mirror (:func:`_rebuild_swapped`)."""
         cur = self.source.current_snapshot()
-        shutil.rmtree(self.path, ignore_errors=True)
-        self._open_table()
-        if cur is None:
-            return
-        sid = int(cur["snapshot_id"])
-        src = self.source.read(spark, snapshot_id=sid)
-        meta = {"feed_cursor": sid}
-        if src is None:
-            self._apply(spark, None, sid, cur.get("truncate"))
-            return
-        rows = src.withColumn("is_deleted", F.lit(0))
-        if self.member_key is not None:
-            rows = rows.withColumn(
-                "_member_id",
-                F.concat_ws(
-                    _MEMBER_SEP,
-                    F.col(self.source.key),
-                    F.col(self.member_key).cast("string"),
-                ),
+
+        def build(tmp: str) -> None:
+            table = self._open_table(tmp)
+            if cur is None:
+                return
+            sid = int(cur["snapshot_id"])
+            src = self.source.read(spark, snapshot_id=sid)
+            rows = (
+                self._no_rows(spark)
+                if src is None
+                else self._with_member_id(src.withColumn("is_deleted", F.lit(0)))
             )
-        self.table.merge_lww(
-            spark,
-            rows,
-            epoch_id=0,
-            pre_reduced=True,
-            truncate=cur.get("truncate"),
-            extra_meta=meta,
-        )
+            table.merge_lww(
+                spark,
+                rows,
+                epoch_id=0,
+                pre_reduced=True,
+                truncate=cur.get("truncate"),
+                extra_meta={"feed_cursor": sid},
+            )
+
+        _rebuild_swapped(self.path, build)
+        self.table = self._open_table(self.path)
 
     # -- verification ----------------------------------------------------------
 
@@ -391,15 +412,9 @@ class VectorFeedMirror:
         re-sync escape hatch): bulk-upsert every live vector and set the
         cursor to that snapshot — all in one commit. ``snapshot_id`` pins a
         HISTORICAL snapshot (default: current) — a consumer bootstrapping
-        at a known point before tailing the feed.
-
-        The replacement index is built in a SIBLING temp directory and
-        swapped into place with directory renames (ADVICE r6): a concurrent
-        searcher keeps reading the old index's files throughout the build
-        (POSIX unlinked-inode semantics), never an empty or half-built one,
-        and a crash mid-build leaves the old index fully intact (leftover
-        ``.resync-*`` dirs are reclaimed by the next resync). The only
-        non-atomic window left is the instant between the two renames."""
+        at a known point before tailing the feed. The new index is built
+        beside the old one and swapped in (:func:`_rebuild_swapped`), so
+        searchers never see an empty or half-built index."""
         from ..functions.vector_index import IncrementalVectorIndex
 
         cur = (
@@ -407,18 +422,15 @@ class VectorFeedMirror:
             if snapshot_id is None
             else self.source.snapshot(snapshot_id)
         )
-        if cur is None:
-            shutil.rmtree(self.path, ignore_errors=True)
-            self.index = IncrementalVectorIndex(self.path, **self._index_kw)
-            return
-        tmp = self.path + ".resync-tmp"
-        old = self.path + ".resync-old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        new_index = IncrementalVectorIndex(tmp, **self._index_kw)
-        sid = int(cur["snapshot_id"])
-        src = self.source.read(spark, snapshot_id=sid)
-        if src is not None:
+
+        def build(tmp: str) -> None:
+            new_index = IncrementalVectorIndex(tmp, **self._index_kw)
+            if cur is None:
+                return
+            sid = int(cur["snapshot_id"])
+            src = self.source.read(spark, snapshot_id=sid)
+            if src is None:
+                return  # virgin source: cursor 0 is already correct
             rows = src.where(F.col("embedding").isNotNull()).select(
                 "chunk_id", F.col(self.source.key).alias("url"),
                 "op", "warc_ts", "pos", "embedding",
@@ -428,12 +440,8 @@ class VectorFeedMirror:
                 truncate=cur.get("truncate"),
                 extra_meta={"feed_cursor": sid},
             )
-        # src None (virgin source): cursor 0 is already correct — swap in
-        # the empty build either way
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+
+        _rebuild_swapped(self.path, build)
         self.index = IncrementalVectorIndex(self.path, **self._index_kw)
 
     def diff_vs_source(self, spark: SparkSession) -> int:

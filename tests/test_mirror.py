@@ -6,6 +6,7 @@ and the set-mode chunks table (member granularity)."""
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from changedatacapture_spark.sinks.lake import LakeTable
@@ -87,6 +88,49 @@ def test_row_mirror_resyncs_when_window_unavailable(spark, tmp_path):
     assert mir.sync(spark) == "applied"
     assert mir.diff_vs_source(spark) == 0
 
+
+
+def test_failed_resync_leaves_the_old_mirror_intact(spark, tmp_path, monkeypatch):
+    """A rebuild whose commit fails must leave the previous mirror — its
+    rows and its durable ``feed_cursor`` — as they were (the rebuild runs
+    beside the mirror and is swapped in only once committed); a later
+    resync then completes."""
+    src = LakeTable(str(tmp_path / "src"), key="url", n_buckets=4)
+    mir = FeedMirror(src, str(tmp_path / "mir"))
+
+    def rows(data):
+        return spark.createDataFrame(data, _ROW_SCHEMA)
+
+    def live(table):
+        df = table.read(spark)
+        return [] if df is None else sorted(tuple(r) for r in df.collect())
+
+    src.merge_lww(spark, rows([("a", "c", _ts(1), 1, 0, 10),
+                               ("b", "c", _ts(2), 2, 0, 20)]), epoch_id=0)
+    assert mir.sync(spark) == "applied"
+    cursor, before = mir.cursor, live(mir.table)
+    assert cursor > 0 and len(before) == 2
+    src.merge_lww(spark, rows([("c", "c", _ts(3), 3, 0, 30)]), epoch_id=1)
+
+    orig = LakeTable._publish
+    fired = {"n": 0}
+
+    def failing_once(self, snapshot):
+        if fired["n"] == 0:
+            fired["n"] += 1
+            raise OSError("injected failure of the rebuild's commit")
+        return orig(self, snapshot)
+
+    monkeypatch.setattr(LakeTable, "_publish", failing_once)
+    with pytest.raises(OSError):
+        mir.resync(spark)
+    assert fired["n"] == 1
+    reopened = FeedMirror(src, str(tmp_path / "mir"))
+    assert reopened.cursor == cursor and mir.cursor == cursor
+    assert live(reopened.table) == before
+    mir.resync(spark)
+    assert mir.cursor == src.current_snapshot()["snapshot_id"]
+    assert mir.diff_vs_source(spark) == 0
 
 def test_set_mirror_member_granularity(spark, tmp_path):
     src = LakeTable(

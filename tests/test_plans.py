@@ -91,8 +91,8 @@ def test_merge_on_read_write_plan_reads_no_existing_data(spark, tmp_path):
     # build exactly what the second merge writes and inspect its plan
     # (same key → same bucket stacks two delta files)
     b1 = spark.createDataFrame([("u1", ts, 2, "u", 0, "v2")], schema)
-    t._current_write_schema = t._merged_schema(b1)
-    to_write = _align_to(b1, t._current_write_schema).withColumn(
+    write_schema = t._merged_schema(t.current_snapshot(), b1)
+    to_write = _align_to(b1, write_schema).withColumn(
         "_bucket", _bucket_col("url", 4)
     )
     plan = _plan(to_write)
@@ -107,9 +107,9 @@ def test_merge_on_read_write_plan_reads_no_existing_data(spark, tmp_path):
 
 
 def test_set_table_read_skips_resolution_after_compaction(spark, tmp_path):
-    """After compact() the snapshot is marked resolved — reads skip the
-    window/aggregate entirely (no Window node, no max_by) so point lookups on
-    a compacted table stay scan-cheap."""
+    """After compact() every bucket holds ≤1 file, which is resolved by
+    construction — reads skip the window/aggregate entirely (no Window node,
+    no max_by) so point lookups on a compacted table stay scan-cheap."""
     import datetime as dt
 
     from changedatacapture_spark.sinks.lake import LakeTable
