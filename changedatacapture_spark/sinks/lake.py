@@ -1874,22 +1874,31 @@ class LakeTable:
         return _bucket_col(self.key, self.n_buckets)
 
     def _buckets_of_keys(self, spark: SparkSession, keys: list[str]) -> dict[int, list[str]]:
-        """bucket id → keys, via one tiny Spark job (the bucket hash is
-        ``xxhash64``, a JVM function — constant cost, not data-dependent).
-        Column-bucketed tables can't derive a key's bucket (it depends on the
-        row's vector), so every bucket is in scope — the per-file key blooms
-        still prune the actual scan."""
+        """bucket id → keys, by :func:`_bucket_col` over an inline ``VALUES``
+        table: the optimizer folds the projection into a local relation, so
+        no Spark job runs (``createDataFrame`` of a Python list would run one,
+        on its own Python daemon). Column-bucketed tables can't derive a key's
+        bucket (it depends on the row's vector), so every bucket is in scope —
+        the per-file key blooms still prune the actual scan."""
         if self.bucket_source == "column":
             snap = self.current_snapshot()
             bs = [int(b) for b in snap["buckets"]] if snap else []
             return {b: list(keys) for b in bs}
-        kdf = spark.createDataFrame([(k,) for k in keys], f"`{self.key}` string")
-        rows = kdf.select(
-            F.col(self.key), _bucket_col(self.key, self.n_buckets).alias("_b")
-        ).collect()
+        if not keys:
+            return {}
+        rows = (
+            spark.sql(
+                "SELECT CAST(k AS STRING) AS k FROM VALUES "
+                + ", ".join(["(?)"] * len(keys))
+                + " AS t(k)",
+                args=list(keys),
+            )
+            .select("k", _bucket_col("k", self.n_buckets).alias("_b"))
+            .collect()
+        )
         out: dict[int, list[str]] = {}
         for r in rows:
-            out.setdefault(int(r["_b"]), []).append(r[self.key])
+            out.setdefault(int(r["_b"]), []).append(r["k"])
         return out
 
     def files_for_keys(self, spark: SparkSession, keys: list[str]) -> list[str]:
@@ -2402,20 +2411,27 @@ class LakeTable:
             # feed; the Iceberg v2 equality-delete-file twin). O(touched
             # keys), written distributed.
             sidecar_rel = os.path.join("_meta", "replaced", f"rk-{uuid.uuid4().hex}")
+            sidecar = os.path.join(self.path, sidecar_rel)
             keys_b.select(self.key).union(rows.select(self.key)).distinct().write.mode(
                 "overwrite"
-            ).parquet(os.path.join(self.path, sidecar_rel))
-            return self._commit(
-                snap,
-                out,
-                schema,
-                epoch_id,
-                kind="replace",
-                touched_buckets=touched,
-                keep_files=keep,
-                truncate=truncate,
-                extra_meta=dict(extra_meta or {}, replaced_keys=sidecar_rel),
-            )
+            ).parquet(sidecar)
+            try:
+                return self._commit(
+                    snap,
+                    out,
+                    schema,
+                    epoch_id,
+                    kind="replace",
+                    touched_buckets=touched,
+                    keep_files=keep,
+                    truncate=truncate,
+                    extra_meta=dict(extra_meta or {}, replaced_keys=sidecar_rel),
+                )
+            except CommitConflictError:
+                # no snapshot references this attempt's sidecar; the re-plan
+                # writes its own
+                shutil.rmtree(sidecar, ignore_errors=True)
+                raise
 
         return self._replan(plan)
 

@@ -231,7 +231,7 @@ class FeedMirror:
             rows = (
                 self._no_rows(spark)
                 if src is None
-                else self._with_member_id(src.withColumn("is_deleted", F.lit(0)))
+                else self._with_member_id(src.drop("is_deleted"))
             )
             table.merge_lww(
                 spark,

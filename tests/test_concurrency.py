@@ -179,6 +179,11 @@ def test_rewrite_replans_when_an_append_lands_after_its_planning_read(
     assert "50" in epochs
     if op == "replace_keys":
         assert [got[k] for k in keys] == [999] * 4 and "7" in epochs
+        # the attempt that lost the publish race removed its sidecar
+        sidecar = final.current_snapshot()["meta"]["replaced_keys"]
+        assert os.listdir(os.path.join(path, "_meta", "replaced")) == [
+            os.path.basename(sidecar)
+        ]
     else:
         assert final.max_files_per_bucket() == 1
 

@@ -637,3 +637,64 @@ def test_orphan_file_in_committed_bucket_dir_is_never_read(spark, tmp_path):
     assert table.vacuum() == 1
     assert not os.path.exists(orphan) and os.path.exists(victim)
     assert table.read(spark).count() == 10
+
+
+def test_key_buckets_match_the_write_path_bucket(spark, tmp_path):
+    """A point read looks for each key in the bucket the write path put it
+    in: ``_buckets_of_keys`` (inline ``VALUES``, no job) ≡ ``_bucket_col``
+    over a DataFrame, for keys on every hash code path (empty, 1 byte,
+    below/at/above the 32-byte stripe, multi-byte UTF-8, SQL quote and
+    escape characters, null) and several bucket counts."""
+    import random
+
+    from changedatacapture_spark.sinks.lake import _bucket_col
+
+    rnd = random.Random(7)
+    alphabet = "abcdefghijklmnopqrstuvwxyz0123456789/.-_'\\\"?"
+    wide = "é日本語€𝄞ß"
+    keys = ["", "a"]
+    for n in (7, 8, 31, 32, 33, 64, 100):
+        keys += ["".join(rnd.choice(alphabet) for _ in range(n)) for _ in range(20)]
+    keys += [
+        "".join(rnd.choice(alphabet + wide) for _ in range(rnd.randint(1, 80)))
+        for _ in range(100)
+    ]
+    keys += [f"https://example.com/page/{i}" for i in range(100)] + [None]
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    for n in (2, 8, 16, 256):
+        want = {r["k"]: r["b"] for r in df.select("k", _bucket_col("k", n).alias("b")).collect()}
+        table = LakeTable(str(tmp_path / f"b{n}"), key="url", n_buckets=n)
+        got = {k: b for b, ks in table._buckets_of_keys(spark, keys).items() for k in ks}
+        assert got == want, n
+
+
+def test_read_keys_plans_without_a_spark_job(spark, tmp_path):
+    """Finding a point read's buckets launches no Spark job: the keys are
+    hashed over a local relation, so planning ``read_keys`` runs nothing
+    until the returned DataFrame is used."""
+    import uuid
+
+    table = LakeTable(str(tmp_path / "pr"), key="url", n_buckets=8)
+    ts = dt.datetime(2024, 1, 1)
+    table.merge_lww(
+        spark,
+        spark.createDataFrame(
+            [(f"u{i}", ts, i, "c", 0, f"v{i}") for i in range(40)], _R3_SCHEMA
+        ),
+        epoch_id=0,
+    )
+    sc = spark.sparkContext
+    group = f"read-keys-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of planning one read_keys")
+    try:
+        df = table.read_keys(spark, ["u3", "u17", "absent"])
+        files = table.files_for_keys(spark, ["u3"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert len(files) == 1
+    assert sorted((r["url"], r["text"]) for r in df.collect()) == [
+        ("u17", "v17"),
+        ("u3", "v3"),
+    ]

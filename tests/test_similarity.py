@@ -188,3 +188,57 @@ def test_ivf_ann_pruning_and_neardup_recall(spark, tmp_path):
         hit += int(bool(got) and got[0]["vec_id"] == ids[qi])
         tot += 1
     assert hit / tot >= 0.9, f"IVF near-dup recall {hit / tot:.2f}"
+
+
+def test_bucket_expr_matches_per_element_literal_construction(spark):
+    """Building each plane as one array literal leaves every bucket id as it
+    was with one ``F.lit`` per element — including vectors whose projection
+    is exactly 0.0, a ±1e-300 sliver, or two cancelling terms whose sum's
+    sign depends on the last bit of every plane value."""
+    dim, n_planes = 384, 8
+    planes = sim._projection_matrix(dim, n_planes)
+
+    def per_element_reference(vec_col):
+        b = F.lit(0)
+        for p in range(n_planes):
+            proj = F.aggregate(
+                F.zip_with(
+                    F.col(vec_col).cast("array<double>"),
+                    F.array(*[F.lit(float(x)) for x in planes[p]]),
+                    lambda a, bb: a * bb,
+                ),
+                F.lit(0.0).cast("double"),
+                lambda acc, x: acc + x,
+            )
+            b = b + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
+        return b
+
+    rng = np.random.default_rng(11)
+    vecs = [list(v) for v in rng.standard_normal((1900, dim))]
+    vecs.append([0.0] * dim)
+    vecs.append([-0.0] * dim)
+    for p in range(n_planes):
+        for j in (0, dim // 2, dim - 1):
+            for target in (1e-300, -1e-300, 0.0):
+                v = [0.0] * dim
+                v[j] = target / planes[p][j]
+                vecs.append(v)
+        for _ in range(12):
+            j1, j2 = rng.choice(dim, size=2, replace=False)
+            v = [0.0] * dim
+            v[j1], v[j2] = 1.0 / planes[p][j1], -1.0 / planes[p][j2]
+            vecs.append(v)
+    vecs += [list(v * 1e-160) for v in rng.standard_normal((26, dim))]
+    assert len(vecs) >= 2000
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "i int, embedding array<double>",
+    )
+    got = df.select(
+        "i",
+        sim.bucket_expr("embedding", planes).alias("new"),
+        per_element_reference("embedding").alias("ref"),
+    ).collect()
+    assert len(got) == len(vecs)
+    assert all(r["new"] == r["ref"] for r in got)
+    assert len({r["new"] for r in got}) > 100  # the planes really split the set
